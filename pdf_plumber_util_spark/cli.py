@@ -21,7 +21,7 @@ import json
 import os
 import sys
 
-from .exceptions import EngineError
+from .exceptions import EngineError, SchemaMismatchError
 
 
 def _spark(cores: int | None = None):
@@ -394,7 +394,15 @@ def cmd_shards(args) -> int:
     docs = spark.read.parquet(args.input)
     if args.id_col != "doc_id":
         docs = docs.withColumnRenamed(args.id_col, "doc_id")
-    token_col = args.token_col if args.token_col in docs.columns else None
+    token_col = args.token_col
+    if token_col is None:
+        token_col = "n_chars" if "n_chars" in docs.columns else None
+    elif token_col not in docs.columns:
+        raise SchemaMismatchError(
+            args.input, [token_col], docs.columns,
+            suggestion="Name an existing column with --token-col, or omit "
+                       "it to use n_chars (0 tokens when that is absent)",
+        )
     plan = shuffle_shards(
         docs.withColumn("_tok", F.coalesce(F.col(token_col), F.lit(0)))
         if token_col else docs.withColumn("_tok", F.lit(0)),
@@ -570,7 +578,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--salt", default="shard1",
                    help="re-salt for an independent epoch shuffle")
     p.add_argument("--id-col", default="doc_id")
-    p.add_argument("--token-col", default="n_chars")
+    p.add_argument("--token-col", default=None,
+                   help="per-doc token count column (default: n_chars "
+                        "when present, else 0); an absent named column "
+                        "is an error")
     p.add_argument("--cores", type=int, default=None)
     p.set_defaults(fn=cmd_shards)
 

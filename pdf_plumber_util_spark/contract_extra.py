@@ -3401,6 +3401,33 @@ FROM sharded
 """
 
 
+def _planted_paragraph_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The d19-d21 documents: the synthetic docs are single-paragraph, so
+    each gets a planted 3-paragraph layout, a shared boilerplate paragraph
+    and two overlapping body slices. NULL text is the empty string, as in
+    the SQL twin (_PLANTED_PARAGRAPHS_SQL)."""
+    text = F.coalesce(F.col("text"), F.lit(""))
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.concat_ws(
+            "\n\n",
+            F.lit("subscribe to our newsletter for daily updates"),
+            F.substring(text, 1, 120),
+            F.substring(text, 90, 120),
+        ).alias("text"),
+    )
+
+
+_PLANTED_PARAGRAPHS_SQL = r"""
+WITH built AS (
+  SELECT doc_id,
+    'subscribe to our newsletter for daily updates'
+      || chr(10) || chr(10) || substr(COALESCE(text, ''), 1, 120)
+      || chr(10) || chr(10) || substr(COALESCE(text, ''), 90, 120) AS text
+  FROM documents
+)"""
+
+
 def q_paragraph_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d19: paragraph-granularity FUZZY dedup. The synthetic docs are
     single-paragraph, so the query plants a 3-paragraph layout
@@ -3409,28 +3436,14 @@ def q_paragraph_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     underlying texts near-duplicate)."""
     from .operators.dedup import paragraph_neardup
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat_ws(
-            "\n\n",
-            F.lit("subscribe to our newsletter for daily updates"),
-            F.substring("text", 1, 120),
-            F.substring("text", 90, 120),
-        ).alias("text"),
-    )
+    docs = _planted_paragraph_docs(spark, sf_dir)
     return paragraph_neardup(docs, min_para_chars=3)
 
 
 EXTRA_QUERIES["d19_paragraph_neardup"] = q_paragraph_neardup
 
-EXTRA_ORACLES["d19_paragraph_neardup"] = r"""
-WITH built AS (
-  SELECT doc_id,
-    'subscribe to our newsletter for daily updates'
-      || chr(10) || chr(10) || substr(text, 1, 120)
-      || chr(10) || chr(10) || substr(text, 90, 120) AS text
-  FROM documents
-), paras AS (
+EXTRA_ORACLES["d19_paragraph_neardup"] = _PLANTED_PARAGRAPHS_SQL + r"""
+, paras AS (
   SELECT doc_id, u.p.idx AS para_idx, u.p.para AS para
   FROM (
     SELECT doc_id, regexp_split_to_array(text, '\n{2,}') AS ps FROM built
@@ -3480,28 +3493,14 @@ def q_drop_dup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     vanish from every doc)."""
     from .operators.dedup import drop_dup_paragraphs
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat_ws(
-            "\n\n",
-            F.lit("subscribe to our newsletter for daily updates"),
-            F.substring("text", 1, 120),
-            F.substring("text", 90, 120),
-        ).alias("text"),
-    )
+    docs = _planted_paragraph_docs(spark, sf_dir)
     return drop_dup_paragraphs(docs)
 
 
 EXTRA_QUERIES["d20_drop_dup_paragraphs"] = q_drop_dup_paragraphs
 
-EXTRA_ORACLES["d20_drop_dup_paragraphs"] = r"""
-WITH built AS (
-  SELECT doc_id,
-    'subscribe to our newsletter for daily updates'
-      || chr(10) || chr(10) || substr(text, 1, 120)
-      || chr(10) || chr(10) || substr(text, 90, 120) AS text
-  FROM documents
-), paras AS (
+EXTRA_ORACLES["d20_drop_dup_paragraphs"] = _PLANTED_PARAGRAPHS_SQL + r"""
+, paras AS (
   SELECT doc_id, u.p.idx AS para_idx, u.p.para AS para
   FROM (
     SELECT doc_id, regexp_split_to_array(text, '\n{2,}') AS ps FROM built
@@ -3589,15 +3588,7 @@ def q_paragraph_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 paragraphs) so the pair machinery of d12 applies unchanged."""
     from .operators.dedup import lsh_candidate_pairs, ngram_jaccard
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat_ws(
-            "\n\n",
-            F.lit("subscribe to our newsletter for daily updates"),
-            F.substring("text", 1, 120),
-            F.substring("text", 90, 120),
-        ).alias("text"),
-    )
+    docs = _planted_paragraph_docs(spark, sf_dir)
     pseudo = docs.select(
         "doc_id",
         F.posexplode(F.split(F.col("text"), r"\n{2,}")).alias(
@@ -3626,14 +3617,8 @@ def q_paragraph_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 EXTRA_QUERIES["d21_paragraph_lsh_recall"] = q_paragraph_lsh_recall
 
-EXTRA_ORACLES["d21_paragraph_lsh_recall"] = r"""
-WITH built AS (
-  SELECT doc_id,
-    'subscribe to our newsletter for daily updates'
-      || chr(10) || chr(10) || substr(text, 1, 120)
-      || chr(10) || chr(10) || substr(text, 90, 120) AS text
-  FROM documents
-), paras AS (
+EXTRA_ORACLES["d21_paragraph_lsh_recall"] = _PLANTED_PARAGRAPHS_SQL + r"""
+, paras AS (
   SELECT doc_id * 1000 + u.p.idx AS pid, u.p.para AS para
   FROM (
     SELECT doc_id, regexp_split_to_array(text, '\n{2,}') AS ps FROM built

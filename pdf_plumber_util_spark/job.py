@@ -49,7 +49,11 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("plumbspark-extract").getOrCreate()
+    from pdf_plumber_util_spark.session import CODEGEN_CONF
+
+    # executors compile generated code too: same cache size and class names
+    spark = (SparkSession.builder.appName("plumbspark-extract")
+             .config(map=CODEGEN_CONF).getOrCreate())
 
     from pdf_plumber_util_spark.plans.resume import (
         SIDECAR,

@@ -11,6 +11,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Whole-stage codegen settings, fixed for every session the package makes
+# (get_spark here, and the cluster builder in job.py). Compile counts are
+# CodegenMetrics.METRIC_COMPILATION_TIME per extract_documents call,
+# 4-core local session.
+# - cache.maxEntries: the JVM-wide generated-class cache (an LRU, default
+#   100) is smaller than the 205-325 distinct classes one extract call
+#   compiles, so every class was evicted before its next use and each
+#   warm call re-ran Janino on all of them (313, 207, 324, 216, 218
+#   compiles on five back-to-back calls at 64/64/600/600/600 pages),
+#   then ran the fresh classes before the JIT had compiled them. 2000 is
+#   six times one extract call's count.
+# - useIdInClassName=false: AQE picks sort-merge instead of broadcast
+#   joins as the input grows, which renumbers the codegen stages; with
+#   the stage id in the class name (GeneratedIteratorForCodegenStageN)
+#   identical operator code then misses the cache (83 compiles on the
+#   first 600-page call after the 64-page ones, 11 without the id).
+# With both, the same five calls compile 251, 0, 11, 0, 0 classes.
+CODEGEN_CONF = {
+    "spark.sql.codegen.cache.maxEntries": "2000",
+    "spark.sql.codegen.useIdInClassName": "false",
+}
+
 
 def get_spark(
     app_name: str = "pdf_plumber_util_spark",
@@ -41,6 +63,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        .config(map=CODEGEN_CONF)
     )
     # Pin the initial heap to the max and pre-touch it: Spark only passes
     # -Xmx, so the heap otherwise grows from a small initial size under

@@ -363,3 +363,20 @@ def test_cli_shards_layout_and_summary(spark, tmp_path, capsys):
         assert r.sort_key == key and r.shard == int(key[:8], 16) % 4
     for shard, g in written.groupby("shard"):
         assert sorted(g["pos"]) == list(range(1, len(g) + 1))
+
+
+def test_cli_shards_missing_token_col_is_an_error(spark, tmp_path, capsys):
+    """A --token-col the input lacks (e.g. a typo) exits 2 with an error
+    that names the column, instead of zeroing every doc's token count."""
+    docs_path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"text {i}", 10 + i) for i in range(8)],
+        "doc_id long, text string, n_chars long",
+    ).write.parquet(docs_path)
+    out = str(tmp_path / "outs")
+    assert cli.main(["shards", "--input", docs_path, "--output", out,
+                     "--n-shards", "2", "--token-col", "n_tokenz",
+                     "--cores", "8"]) == 2
+    err = capsys.readouterr().err
+    assert "n_tokenz" in err and "missing columns" in err
+    assert not os.path.exists(os.path.join(out, "doc_shards"))

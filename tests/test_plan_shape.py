@@ -489,3 +489,24 @@ def test_shuffle_shards_single_exchange(spark):
     n = len(re.findall(r"Exchange hashpartitioning", plan))
     assert n == 1, f"expected 1 exchange, got {n}:\n{plan[:3000]}"
     assert "Exchange rangepartitioning" not in plan  # no global sort
+
+
+def test_warm_extract_compiles_no_classes(spark):
+    """The session's codegen cache holds the whole extract plan: a second
+    identical extract_documents call re-runs no Janino compile (with the
+    default 100-entry cache it recompiled 200-330 classes per call)."""
+    from pdf_plumber_util_spark.plans.extract import extract_documents
+    from pdf_plumber_util_spark.session import CODEGEN_CONF
+
+    for key, value in CODEGEN_CONF.items():
+        assert spark.conf.get(key) == value, key
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    pages = synth_pages(spark, 8)
+    extract_documents(pages).toPandas()
+    before = compiles()
+    extract_documents(pages).toPandas()
+    assert compiles() - before == 0

@@ -210,6 +210,40 @@ def test_curate_drop_dup_paragraphs_gate_interaction(spark):
     assert not out[2].keep
 
 
+def test_planted_paragraphs_null_text_matches_oracle(spark, sf_dir, tmp_path):
+    """d19/d20/d21 treat NULL text as the empty string on both sides: a
+    NULL-text doc keeps just the planted boilerplate paragraph in Spark
+    and in the DuckDB twin (before, DuckDB's || turned the whole doc
+    NULL and it had no paragraphs)."""
+    import duckdb
+
+    from pdf_plumber_util_spark import contract_extra as cx
+
+    docs = load_table(spark, sf_dir, "documents")
+    assert docs.columns[0] == "doc_id"
+    null_doc = spark.createDataFrame(
+        [(10**6,) + (None,) * (len(docs.columns) - 1)], docs.schema)
+    docs.unionByName(null_doc).write.parquet(str(tmp_path / "documents.parquet"))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/documents.parquet/*.parquet')")
+
+    def rows(df):
+        df = df[sorted(df.columns)]
+        return sorted(tuple(round(v, 9) if isinstance(v, float) else v
+                            for v in r) for r in df.itertuples(index=False))
+
+    for name in ("d19_paragraph_neardup", "d20_drop_dup_paragraphs",
+                 "d21_paragraph_lsh_recall"):
+        got = cx.EXTRA_QUERIES[name](spark, str(tmp_path)).toPandas()
+        want = con.execute(cx.EXTRA_ORACLES[name]).fetchdf()
+        assert rows(got) == rows(want), name
+        if name == "d19_paragraph_neardup":
+            null_paras = got[got.doc_id == 10**6]
+            assert list(null_paras.para_idx) == [0], null_paras
+            assert null_paras.has_near_dup.all()
+
+
 def test_top_ngrams_df_semantics(spark):
     """df counts DOCUMENTS, not occurrences: a phrase repeated 10x inside
     one doc scores df=1; ranking ties break by shingle asc."""
