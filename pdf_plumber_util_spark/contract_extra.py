@@ -3539,19 +3539,18 @@ EXTRA_ORACLES["d20_drop_dup_paragraphs"] = _PLANTED_PARAGRAPHS_SQL + r"""
   SELECT p.doc_id, p.para_idx, p.para,
     COALESCE(f.has_near_dup, FALSE) AS has
   FROM paras p LEFT JOIN flagged f USING (doc_id, para_idx)
+), per_doc AS (
+  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_paras,
+    CAST(SUM(CASE WHEN has THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
+    COALESCE(STRING_AGG(CASE WHEN NOT has THEN para END,
+                        chr(10) || chr(10) ORDER BY para_idx), '') AS kept
+  FROM marked GROUP BY doc_id
 )
 SELECT b.doc_id,
-  COALESCE(
-    (SELECT STRING_AGG(m.para, chr(10) || chr(10) ORDER BY m.para_idx)
-     FROM marked m WHERE m.doc_id = b.doc_id AND NOT m.has),
-    '') AS text,
-  COALESCE(
-    (SELECT CAST(COUNT(*) AS BIGINT) FROM marked m
-     WHERE m.doc_id = b.doc_id), 0) AS n_paras,
-  COALESCE(
-    (SELECT CAST(SUM(CASE WHEN m.has THEN 1 ELSE 0 END) AS BIGINT)
-     FROM marked m WHERE m.doc_id = b.doc_id), 0) AS n_paras_removed
-FROM built b
+  CASE WHEN COALESCE(d.n_removed, 0) > 0 THEN d.kept ELSE b.text END AS text,
+  COALESCE(d.n_paras, 0) AS n_paras,
+  COALESCE(d.n_removed, 0) AS n_paras_removed
+FROM built b LEFT JOIN per_doc d USING (doc_id)
 """
 
 

@@ -49,11 +49,12 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from pdf_plumber_util_spark.session import CODEGEN_CONF
+    from pdf_plumber_util_spark.session import FIXED_CONF
 
-    # executors compile generated code too: same cache size and class names
+    # the package's fixed settings: executors compile generated code too,
+    # and the Spark driver builds the same plans
     spark = (SparkSession.builder.appName("plumbspark-extract")
-             .config(map=CODEGEN_CONF).getOrCreate())
+             .config(map=FIXED_CONF).getOrCreate())
 
     from pdf_plumber_util_spark.plans.resume import (
         SIDECAR,

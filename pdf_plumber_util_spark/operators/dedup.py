@@ -900,6 +900,10 @@ def drop_dup_paragraphs(docs: DataFrame, num_hashes: int = 8,
     with ``text_col`` rewritten plus (n_paras, n_paras_removed); a doc
     whose every paragraph is flagged keeps an empty string (the quality
     gate downstream is what drops it, mirroring the null-text policy).
+    Only a doc that loses a paragraph is rewritten, and its rewrite also
+    drops whitespace-only paragraphs and turns every separator into one
+    blank line; a doc with n_paras_removed == 0 keeps its text
+    byte-for-byte (NULL included).
 
     Re-assembly is the per-doc-bounded collect_list + array_sort fold of
     dedup_lines_within_doc — one (doc, para) exchange, never corpus-wide.
@@ -927,14 +931,15 @@ def drop_dup_paragraphs(docs: DataFrame, num_hashes: int = 8,
         F.sum(F.col("has_near_dup").cast("long")).alias("n_paras_removed"),
     )
     keep_cols = [c for c in docs.columns if c != text_col]
+    removed = F.coalesce("n_paras_removed", F.lit(0))
     return (
-        docs.select(*keep_cols)
-        .join(rebuilt, "doc_id", "left")
+        docs.join(rebuilt, "doc_id", "left")
         .select(
             *keep_cols,
-            F.coalesce("_new_text", F.lit("")).alias(text_col),
+            F.when(removed > 0, F.col("_new_text"))
+            .otherwise(F.col(text_col)).alias(text_col),
             F.coalesce("n_paras", F.lit(0)).alias("n_paras"),
-            F.coalesce("n_paras_removed", F.lit(0)).alias("n_paras_removed"),
+            removed.alias("n_paras_removed"),
         )
     )
 

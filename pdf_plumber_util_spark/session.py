@@ -33,6 +33,21 @@ CODEGEN_CONF = {
     "spark.sql.codegen.useIdInClassName": "false",
 }
 
+# Every fixed setting, for each builder that starts a session: the codegen
+# settings above, and PySpark's call-site capture turned off. PySpark 4.1
+# wraps every pyspark.sql.functions call to record its Python call site
+# for error messages: each call looks up the active session, reads its
+# conf, and sets and clears PySparkCurrentOrigin over py4j. Building one
+# extract_documents plan makes 499 such calls; with capture off (and the
+# analysis tail built over its cache leaf) the build's py4j calls fell
+# from about 9,900 to about 3,800 (600 pages). Errors then carry no Python
+# file:line in their DataFrame query context. PySpark reads the setting
+# once per process, from the first active session it sees.
+FIXED_CONF = {
+    **CODEGEN_CONF,
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+}
+
 
 def get_spark(
     app_name: str = "pdf_plumber_util_spark",
@@ -63,7 +78,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config(map=CODEGEN_CONF)
+        .config(map=FIXED_CONF)
     )
     # Pin the initial heap to the max and pre-touch it: Spark only passes
     # -Xmx, so the heap otherwise grows from a small initial size under

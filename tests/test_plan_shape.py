@@ -510,3 +510,69 @@ def test_warm_extract_compiles_no_classes(spark):
     before = compiles()
     extract_documents(pages).toPandas()
     assert compiles() - before == 0
+
+
+def _node_names(jplan) -> list[str]:
+    """Node names of a JVM plan, walked through children() only (a cached
+    relation is a leaf there: the plan it caches is not a child)."""
+    names, stack = [], [jplan]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_extract_tail_analysed_over_cached_leaf(spark):
+    """extract_documents builds its analysis tail over the lines cache as
+    one leaf: the analysed plan holds the InMemoryRelation and nothing of
+    the tokenizer/window/line plan beneath it (over the persisted
+    DataFrame every tail operator re-analysed that plan)."""
+    from pdf_plumber_util_spark.plans.extract import extract_documents
+
+    h: list = []
+    out = extract_documents(synth_pages(spark, 4), cache_handle=h)
+    try:
+        names = _node_names(out._jdf.queryExecution().analyzed())
+        assert "MapInPandas" not in names, names
+        assert "InMemoryRelation" in names, names
+    finally:
+        for c in h:
+            c.unpersist()
+
+
+def test_extract_documents_zero_exchange_tail(spark):
+    """The production builder, not just its operators: with AQE and
+    broadcast joins off, extract_documents' executed plan has no Exchange
+    above the lines cache (the cached scan keeps the url hash
+    partitioning, so every tail join and window runs co-partitioned)."""
+    from pdf_plumber_util_spark.plans.extract import extract_documents
+
+    old_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    h: list = []
+    try:
+        out = extract_documents(synth_pages(spark, 6), cache_handle=h)
+        names = _node_names(out._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScan" in names, names
+        exchanges = [n for n in names if "Exchange" in n]
+        assert exchanges == [], exchanges
+        assert "SortMergeJoin" in names  # the tail joins really are joins
+    finally:
+        for c in h:
+            c.unpersist()
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+
+
+def test_call_site_capture_off(spark):
+    """The session turns off PySpark's per-call call-site capture (several
+    py4j round trips on every pyspark.sql.functions call), and PySpark
+    reads it as off."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()

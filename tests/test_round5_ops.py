@@ -184,6 +184,37 @@ def test_drop_dup_paragraphs_reassembly(spark):
     assert out[1].lang == "en" and out[3].lang == "fr"
 
 
+def test_drop_dup_paragraphs_keeps_clean_docs_verbatim(spark):
+    """A doc that loses no paragraph keeps its text byte-for-byte: runs of
+    3+ newlines, whitespace-only paragraphs and NULL text survive (before,
+    every doc was re-joined with exactly one blank line between kept
+    paragraphs). A doc that does lose one is still re-assembled."""
+    from pdf_plumber_util_spark.operators.dedup import drop_dup_paragraphs
+
+    boiler = "subscribe to our newsletter for daily updates and offers"
+    u1 = " ".join(f"a{i}" for i in range(20))
+    u2 = " ".join(f"b{i}" for i in range(20))
+    u3 = " ".join(f"c{i}" for i in range(20))
+    clean = f"{u1}\n\n\n\n  \n\n{u2}\n"
+    docs = spark.createDataFrame(
+        [
+            (1, clean),
+            (2, None),
+            (3, "   "),
+            (4, f"{boiler}\n\n\n{u3}"),
+            (5, boiler),
+        ],
+        "doc_id long, text string",
+    )
+    out = {r.doc_id: r for r in drop_dup_paragraphs(docs).collect()}
+    assert out[1].text == clean and out[1].n_paras_removed == 0
+    assert out[1].n_paras == 2
+    assert out[2].text is None and out[2].n_paras == 0
+    assert out[3].text == "   " and out[3].n_paras == 0
+    assert out[4].text == u3 and out[4].n_paras_removed == 1
+    assert out[5].text == "" and out[5].n_paras_removed == 1
+
+
 def test_curate_drop_dup_paragraphs_gate_interaction(spark):
     """curate(drop_dup_paragraphs=True): the boilerplate paragraph is
     stripped BEFORE the gates, so a doc reduced to nothing fails the

@@ -145,6 +145,28 @@ def test_streaming_extraction_parity_and_resume(spark, tmp_path):
     all_pages.unpersist()
 
 
+def test_extract_cache_handle_releases_lines_cache(spark):
+    """The streaming foreachBatch contract: run the extract action,
+    unpersist every cache_handle entry, run the same action again. The
+    rows match, and nothing stays cached: no persistent RDD, an empty
+    cache manager (the state a cold benchmark repetition requires)."""
+    from pdf_plumber_util_spark.contract import clear_shared_lines
+    from pdf_plumber_util_spark.plans.extract import extract_documents
+    from pdf_plumber_util_spark.sources.pages import synth_pages
+
+    clear_shared_lines()
+    spark.catalog.clearCache()
+    h: list = []
+    docs = extract_documents(synth_pages(spark, 6), cache_handle=h)
+    first = sorted(docs.collect())
+    assert h and first
+    for c in h:
+        c.unpersist()
+    assert sorted(docs.collect()) == first
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_write_batch_idempotent_replay(spark, tmp_path):
     """Replaying a micro-batch (at-least-once foreachBatch) overwrites its
     own _batch_id partition instead of appending duplicates."""
