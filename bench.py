@@ -8,8 +8,8 @@ wall seconds in "value" plus per-query seconds. The html-tokenizer
 pipeline additionally runs on SPARK_GRAFT_BENCH_DOCS synthetic pages
 (default 8000; set 0 to skip it).
 
-Host-health protocol (this sandbox throttles its CPU budget in
-multi-minute windows — BASELINE.md "Measurement caveat"): the run is
+Host-health protocol (the old 32-thread host throttled its CPU budget
+in multi-minute windows): the run is
 SELF-GATING, and the gate is two-part because the throttle is a
 burst-refillable quota with hidden state:
 
@@ -48,7 +48,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 CAP_GATE_M = float(os.environ.get("SPARK_GRAFT_BENCH_CAP_M", "250"))
 MAX_WAIT_S = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_WAIT", "300"))
 TOTAL_WAIT_S = float(os.environ.get("SPARK_GRAFT_BENCH_TOTAL_WAIT", "900"))

@@ -19,20 +19,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import (
-    assemble_lines,
     assign_line_ids,
-    body_text,
-    build_segments,
     classify_gaps,
     contextual_spacing_rules,
-    drop_blank_lines,
     final_boundaries,
     form_blocks,
     header_footer_candidates,
     page_base_spacing,
 )
+from .plans.extract import documents_from_lines, lines_from_words
 from .sources.tables import WORDS_FROM_LINEITEM_SQL, load_table, words_from_lineitem
-from .sources.tokenizer import page_dims
 
 # --------------------------------------------------------------------------
 # shared SQL fragments (banker's rounding, mirrors functions/rounding.py)
@@ -301,25 +297,18 @@ def _lines_df(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     hit = _SHARED_LINES.get(key)
     if hit is not None:
         return hit
-    from .operators import assign_line_ids_window
-
-    # Two-level partitioning (plans/extract.py scale note): the word-sized
-    # stage keys on (url, page) — the C1 window's own exchange — so a
-    # multi-page document's heavy window work spreads across pages instead
-    # of serializing in one url task; then ONE line-sized exchange re-keys
-    # the assembled lines to url before the persist, so the entire cached
-    # analysis tail (rules join, blocks, boundaries, body) stays
-    # url-co-partitioned and exchange-free. Keying the *words* on url
-    # (round-3 first cut) capped parallelism at the corpus's url count
-    # (50 at sf0.1) and measured 3.4-4.5 s vs 2.8 s for this shape.
-    words = words_from_lineitem(spark, sf_dir)
-    wl = assign_line_ids_window(words)
-    segs = build_segments(wl)
-    # proportional columns pruned from the cached fixture (only
-    # q_line_text reads them, and it rebuilds from segs directly)
-    lines = drop_blank_lines(
-        assemble_lines(wl, segs, page_dims(words), include_proportional=False)
-    ).repartition(F.col("url")).persist()
+    # Two-level partitioning: the word-sized stage keys on (url, page) —
+    # the C1 window's own exchange — so a multi-page document's window
+    # work spreads across pages instead of serializing in one url task;
+    # then ONE line-sized exchange re-keys the assembled lines to url
+    # before the persist, so the cached analysis tail (rules join, blocks,
+    # boundaries, body) stays url-co-partitioned and exchange-free.
+    # Production (plans/extract.py) repartitions the words by url instead;
+    # both give the same lines. On this fixture's sf0.1 words the
+    # two-level shape measured faster on a 4-core host (lines build plus
+    # q_body_text collect, median 8.73 s vs 10.44 s, 6 alternating pairs).
+    lines, segs = lines_from_words(words_from_lineitem(spark, sf_dir))
+    lines = lines.repartition(F.col("url")).persist()
     _SHARED_LINES[key] = (lines, segs)
     return lines, segs
 
@@ -346,11 +335,7 @@ def q_word_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3/C4/O6: segment runs, text concat, banker-rounded size."""
-    from .operators import assign_line_ids_window
-
-    words = words_from_lineitem(spark, sf_dir)
-    wl = assign_line_ids_window(words)
-    segs = build_segments(wl)
+    _, segs = _lines_df(spark, sf_dir)
     return segs.select(
         "url", "page", "line_id",
         F.col("seg_id").cast("long").alias("seg_id"),
@@ -459,16 +444,10 @@ def q_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_body_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: end-to-end main-content text per url."""
+    """Flagship: end-to-end main-content text per url, built by the
+    production analysis tail (plans.extract.documents_from_lines)."""
     lines, _ = _lines_df(spark, sf_dir)
-    rules = contextual_spacing_rules(lines)
-    blocks = form_blocks(lines, rules)
-    cands = header_footer_candidates(lines)
-    doc_bottom = lines.groupBy("url").agg(
-        F.max(F.col("bbox")["bottom"]).alias("doc_bottom")
-    )
-    bounds = final_boundaries(cands, doc_bottom)
-    return body_text(blocks, bounds).select(
+    return documents_from_lines(lines).select(
         "url", "body_text",
         F.col("n_blocks_kept").cast("long").alias("n_blocks_kept"),
         F.col("n_blocks_dropped").cast("long").alias("n_blocks_dropped"),

@@ -171,42 +171,6 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 4,
     return docs.select("doc_id", F.explode(sel).alias("fingerprint"))
 
 
-def token_counts_bpe(docs: DataFrame, encoding: str = "cl100k_base") -> DataFrame:
-    """A18 exact variant (token_counter.py:86-184): true BPE token counts
-    via tiktoken in a vectorized pandas UDF, for LLM cost estimation
-    against real tokenizers.
-
-    tiktoken is not installed in this sandbox (`import tiktoken` raises
-    ModuleNotFoundError), so this is the documented drop-in slot: the UDF
-    body is the real implementation and runs unchanged once the
-    dependency exists; callers without it get an ImportError up front
-    (cheap, driver-side) rather than executor failures. The regex-proxy
-    `token_counts` above is the oracle-checked default.
-    """
-    import importlib
-
-    if importlib.util.find_spec("tiktoken") is None:
-        raise ImportError(
-            "tiktoken is not installed; use token_counts() (regex proxy) "
-            "or install tiktoken for exact BPE counts"
-        )
-
-    import pandas as pd
-
-    @F.pandas_udf("long")
-    def n_bpe(texts: pd.Series) -> pd.Series:
-        import tiktoken
-
-        enc = tiktoken.get_encoding(encoding)
-        return texts.map(lambda t: len(enc.encode(t or "")))
-
-    return docs.select(
-        "doc_id",
-        n_bpe(F.col("text")).alias("n_tokens_bpe"),
-        F.length("text").cast("long").alias("n_chars"),
-    )
-
-
 def shared_span_stats(docs: DataFrame, k: int = 8, w: int = 4,
                       min_docs: int = 5, max_shared_frac: float = 0.8,
                       max_doc_id: int | None = None) -> DataFrame:

@@ -55,7 +55,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         # one shuffle partition per core locally; cluster-side this scales
         # with executor count (set via spark-submit) and AQE coalesces.

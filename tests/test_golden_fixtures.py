@@ -61,6 +61,7 @@ def _seg_rows(case_segments):
     return rows
 
 
+@pytest.mark.requires_reference
 def test_spacing_reconstruction_golden(spark):
     cases = _load_cases()
     assert len(cases) >= 8

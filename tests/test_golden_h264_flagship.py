@@ -44,6 +44,8 @@ from pdf_plumber_util_spark.operators import (
 )
 from pdf_plumber_util_spark.oracle import pyref
 
+pytestmark = pytest.mark.requires_reference
+
 FIXTURE = "/root/reference/tests/fixtures/test_h264_toc_pages.json"
 PAGE_W, PAGE_H = 612.0, 792.0  # fixture document_info.page_dimensions
 
@@ -56,11 +58,8 @@ BODY_MD5 = "7b22af5f43b61ade84db97c42dbe57de"
 
 
 def _fixture_words():
-    try:
-        with open(FIXTURE) as f:
-            d = json.load(f)
-    except FileNotFoundError:
-        pytest.skip(f"reference fixture not found: {FIXTURE}")
+    with open(FIXTURE) as f:
+        d = json.load(f)
     by_page: dict[int, list[dict]] = {}
     for p in d["pages"]:
         ws = by_page.setdefault(p["page"], [])

@@ -20,6 +20,8 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+pytestmark = pytest.mark.requires_reference
+
 FIXTURE = "/root/reference/tests/fixtures/test_h264_toc_pages.json"
 
 # deterministic goldens (pure-Python twin over the fixture text)
@@ -37,11 +39,8 @@ MATCHES_PER_NAME = {
 
 @pytest.fixture(scope="module")
 def fixture_lines(spark):
-    try:
-        with open(FIXTURE) as f:
-            d = json.load(f)
-    except FileNotFoundError:
-        pytest.skip(f"reference fixture not found: {FIXTURE}")
+    with open(FIXTURE) as f:
+        d = json.load(f)
     rows = [
         ("h264", p["page"], ln["line_number"], ln["text"])
         for p in d["pages"]

@@ -1,5 +1,5 @@
 """Stage sinks, page-range scan, report render, O7 TOC heuristic, S5
-object scan analog, multimodal plumbing."""
+object scan analog."""
 
 import pytest
 from pyspark.sql import Row
@@ -82,26 +82,6 @@ def test_s5_object_scan(spark):
     assert all(r.fontname.endswith("-Link") for r in rows)
 
 
-def test_multimodal_plumbing(spark):
-    from pdf_plumber_util_spark.operators.multimodal import (
-        extract_features,
-        frame_sample,
-        synth_media,
-    )
-
-    media = synth_media(spark, 30)
-    feats = extract_features(media).collect()
-    assert len(feats) == 30
-    assert all(len(r.feature) == 8 for r in feats)
-    # determinism
-    feats2 = extract_features(synth_media(spark, 30)).collect()
-    assert sorted((r.media_id, tuple(r.feature)) for r in feats) == sorted(
-        (r.media_id, tuple(r.feature)) for r in feats2
-    )
-    frames = frame_sample(media, every_n=5)
-    assert frames.filter("frame_idx % 5 != 0").count() == 0
-
-
 def test_s5_objects_hand_derived(spark):
     """S5 objects: geometry asserted from the documented box model, not a
     snapshot. p-block after h1: top = 72 + 24(h1 gap) + 21.6(h1 line) +
@@ -134,22 +114,3 @@ def test_s5_objects_hand_derived(spark):
     # per-page y0 ordering (get_vectors.py:111)
     tops = [r["top"] for r in sorted(objs.values(), key=lambda r: r["obj_idx"])]
     assert tops == sorted(tops)
-
-
-def test_multimodal_resize_plumbing(spark):
-    """resize_images: every output payload is exactly out_w*out_h bytes,
-    deterministic across runs, images only."""
-    from pdf_plumber_util_spark.operators.multimodal import (
-        resize_images,
-        synth_media,
-    )
-
-    media = synth_media(spark, 24)
-    out = resize_images(media, out_w=16, out_h=8).collect()
-    assert out and all(len(r["payload"]) == 16 * 8 for r in out)
-    out2 = resize_images(media, out_w=16, out_h=8).collect()
-    assert {r["media_id"]: bytes(r["payload"]) for r in out} == {
-        r["media_id"]: bytes(r["payload"]) for r in out2
-    }
-    kinds = {r["kind"] for r in media.collect()}
-    assert "image" in kinds and len(out) < media.count()

@@ -1,10 +1,11 @@
 """Physical-plan assertions: the scale design claims must be visible in
 .explain() output, not just in docstrings.
 
-1. One-shuffle extraction: after repartition(url) -> tokenize (projection
-   pandas_udf) -> explode -> C1 applyInPandas -> segments -> lines, the
-   plan contains exactly ONE Exchange (the explicit repartition); every
-   window/groupBy reuses the url hash partitioning.
+1. One-shuffle extraction: tokenize (mapInPandas) -> C1 window ->
+   segments -> lines has exactly ONE word-sized Exchange (the C1 window's
+   (url, page) keying, or the url repartition extract_documents puts
+   before it); every later window/groupBy, and the whole analysis tail
+   above the lines cache, reuses that partitioning.
 2. Parquet pushdown: filters and column pruning reach the scan.
 """
 

@@ -258,25 +258,6 @@ def test_simhash_candidates_exact_recall_within_pigeonhole(spark, sf_dir):
     assert want, "fixture should contain at least one near-dup pair"
 
 
-def test_token_counts_bpe_slot(spark, sf_dir):
-    """The tiktoken slot fails fast and driver-side when the dependency is
-    absent (this sandbox), and the proxy path stays available."""
-    import importlib
-
-    import pytest
-
-    from pdf_plumber_util_spark.operators import text_analysis
-    from pdf_plumber_util_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    if importlib.util.find_spec("tiktoken") is None:
-        with pytest.raises(ImportError):
-            text_analysis.token_counts_bpe(docs)
-    else:
-        assert text_analysis.token_counts_bpe(docs).count() == docs.count()
-    assert text_analysis.token_counts(docs).count() == docs.count()
-
-
 def test_lsh_band_key_lexicographic_for_two_digit_seeds(spark, sf_dir):
     """Band keys must reproduce the round-1 formulation (lexicographically
     sorted 's:hash' strings) for EVERY config, including bands whose seeds
