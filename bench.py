@@ -1,315 +1,64 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
-{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+"""Headline benchmark: the production extraction plan and the curate funnel.
 
-The headline metric is documents/sec of the flagship end-to-end extraction
-(words -> lines -> blocks -> boundaries -> body text), reported as total
-wall seconds in "value" plus per-query seconds. The html-tokenizer
-pipeline additionally runs on SPARK_GRAFT_BENCH_DOCS synthetic pages
-(default 8000; set 0 to skip it).
+    python bench.py
 
-Host-health protocol (the old 32-thread host throttled its CPU budget
-in multi-minute windows): the run is
-SELF-GATING, and the gate is two-part because the throttle is a
-burst-refillable quota with hidden state:
-
-  * the 16-process spin probe (tools/scaling_bench.cpu_capacity)
-    measures the CURRENT allowed rate — it catches a clamped window
-    (< SPARK_GRAFT_BENCH_CAP_M, default 250 M → sleep and re-probe,
-    up to SPARK_GRAFT_BENCH_MAX_WAIT s per segment / _TOTAL_WAIT s
-    cumulative) but NOT how much burst RESERVE remains: a probe can
-    read healthy immediately after a heavy pass, and a 32-core query
-    launched right then still exhausts the reserve mid-run (observed
-    2026-08-18: both passes gated healthy at ~260 M yet flagship
-    timed 10-17 s vs its 6.1 s quiet median, while the html pass that
-    ran after ~100 s of accumulated gate sleeps was 6x faster than
-    its drained twin);
-  * so after the probe clears, the harness IDLES for
-    SPARK_GRAFT_BENCH_REFILL s (default 45) before every EXPENSIVE
-    segment (flagship, curate funnel, html passes) — idle time is
-    when the quota reserve refills.
-
-Probes themselves cost ~80 core-seconds each (16 procs x 5 s), so
-only pass starts and expensive segments are gated; the sub-3 s
-queries ride the pass window they started in and min-of-two passes
-absorbs any residual clamp. The flagship gets a THIRD gated cold
-attempt at the end (it is the headline number). All probes and waits
-are embedded in the JSON so the artifact carries its own health
-evidence.
+Runs perfbench/run.py (the benchmark declared in BENCHMARK.json) for the
+extract_html and then the curate_funnel workload, each in its own process
+at --seed 1 --seconds 10 --trace 0, and prints one JSON line of at most
+1,500 chars built from their last stdout lines. The headline value is
+extract_html's docs_per_s; the full ledgers are in perfbench/results/.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-CAP_GATE_M = float(os.environ.get("SPARK_GRAFT_BENCH_CAP_M", "250"))
-MAX_WAIT_S = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_WAIT", "300"))
-TOTAL_WAIT_S = float(os.environ.get("SPARK_GRAFT_BENCH_TOTAL_WAIT", "900"))
-REFILL_S = float(os.environ.get("SPARK_GRAFT_BENCH_REFILL", "45"))
-
-# queries heavy enough to need their own burst reserve (see module doc)
-EXPENSIVE = {"flagship_body_text", "curate_corpus"}
-
-BENCH_QUERIES = [
-    "flagship_body_text",
-    "c6_blocks",
-    "a7_spacing_rules",
-    "o1_classify",
-    "h5_boundaries",
-    "d1_exact_dedup",
-    "d2_minhash_bands",
-    "s1_cosine_topk",
-    "e1_events_hourly",
-    "a18_token_counts",
-    "curate_corpus",
-]
+REPO = os.path.dirname(os.path.abspath(__file__))
+WORKLOADS = ("extract_html", "curate_funnel")
+SEED = 1
+MAX_CHARS = 1500
 
 
-def q_curate_corpus(spark, sf_dir):
-    """The composed curation funnel with every gate ON (domain blocklist,
-    duplicate-span coverage, quality, repetition, exact dedup,
-    decontamination, mix subsample, perplexity bucket) — the product
-    query a training-data user actually runs (plans/curate.py)."""
-    from pyspark.sql import functions as F
-
-    from pdf_plumber_util_spark.contract_extra import _messy_urls
-    from pdf_plumber_util_spark.plans.curate import curate_corpus
-    from pdf_plumber_util_spark.sources.tables import load_table
-
-    base = load_table(spark, sf_dir, "documents")
-    docs = base.join(_messy_urls(base), "doc_id")
-    eval_docs = docs.filter(F.col("doc_id") % 101 == 0).select("doc_id", "text")
-    return curate_corpus(
-        docs,
-        eval_docs=eval_docs,
-        block_domains=["dup.example.com", "src7.example.com"],
-        max_dup_span_frac=0.5,
-        mix_rates={"en": 0.8},
-        drop_perplexity_tail=True,
-    )
+def ledger_path(workload: str) -> str:
+    return f"perfbench/results/{workload}-seed{SEED}-trace0.json"
 
 
-def _probe():
-    try:
-        from tools.scaling_bench import cpu_capacity
-
-        return round(cpu_capacity(), 1)
-    except Exception:
-        return None
-
-
-def _gate(probes: list, waits: list, segment: str,
-          refill_s: float = 0.0, segments: list | None = None) -> None:
-    """Block until the CPU window is healthy (capacity >= gate) or the
-    per-segment / cumulative wait budgets run out, then idle refill_s
-    more to rebuild the burst reserve (the probe cannot see it — module
-    doc). The probe is recorded either way: the artifact must carry its
-    own health evidence."""
-    p = _probe()
-    waited = 0.0
-    while (
-        p is not None
-        and p < CAP_GATE_M
-        and waited < MAX_WAIT_S
-        and sum(waits) + waited < TOTAL_WAIT_S
-    ):
-        print(
-            json.dumps(
-                {"segment": segment, "throttled_capacity_M": p, "waiting_s": 20}
-            ),
-            file=sys.stderr,
-            flush=True,
-        )
-        time.sleep(20)
-        waited += 20
-        p = _probe()
-    # the refill idle is a bounded, fixed-count cost (one per expensive
-    # segment), so it does not draw down the throttle-wait budget
-    if refill_s:
-        time.sleep(refill_s)
-    probes.append(p)
-    waits.append(round(waited, 1))
-    if segments is not None:
-        segments.append(
-            {"segment": segment, "probe_M": p, "waited_s": round(waited, 1),
-             "refill_s": refill_s}
-        )
+def headline(runs: dict[str, dict], cpus: int) -> str:
+    """One JSON line from each workload's parsed perfbench stdout line."""
+    return json.dumps({
+        "metric": "extract_docs_per_sec",
+        "value": runs["extract_html"]["metrics"]["docs_per_s"]["value"],
+        "unit": "docs/s",
+        "correct": all(r["correct"] and r["failed"] == 0 for r in runs.values()),
+        "cpus": cpus,
+        "workloads": {name: {m: v["value"] for m, v in r["metrics"].items()}
+                      for name, r in runs.items()},
+        "ledgers": [ledger_path(name) for name in runs],
+    }, separators=(",", ":"))
 
 
-def _gate_evidence(segments: list, probes: list, waits: list) -> dict:
-    """Machine-readable gate-health record (VERDICT r4 #6): a stable
-    schema future judges can parse instead of reconstructing health from
-    prose. Optionally embeds the latest scaling_bench summary
-    ($SPARK_GRAFT_SCALING_JSON, default artifacts/round5/scaling_r5.json)
-    so one artifact carries both gate health and scaling evidence."""
-    passed = [
-        s for s in segments if s["probe_M"] is not None
-        and s["probe_M"] >= CAP_GATE_M
-    ]
-    ev = {
-        "schema": 1,
-        "capacity_gate_M": CAP_GATE_M,
-        "refill_idle_s": REFILL_S,
-        "max_wait_s": MAX_WAIT_S,
-        "total_wait_budget_s": TOTAL_WAIT_S,
-        "segments": segments,
-        "n_segments": len(segments),
-        "n_gates_passed": len(passed),
-        "all_gates_passed": len(passed) == len(segments),
-        "total_gate_wait_s": round(sum(waits), 1),
-        "probes_M": probes,
-    }
-    scaling_path = os.environ.get(
-        "SPARK_GRAFT_SCALING_JSON",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "artifacts", "round5", "scaling_r5.json"),
-    )
-    try:
-        with open(scaling_path) as f:
-            s = json.load(f)
-        ev["scaling"] = {
-            "source": scaling_path,
-            "n_docs": s.get("n_docs"),
-            "low_cores": s.get("low_cores"),
-            "high_cores": s.get("high_cores"),
-            "scaling_efficiency": s.get("scaling_efficiency"),
-            "per_round_efficiencies": s.get("per_round_efficiencies"),
-            "rejected_rounds": s.get("rejected_rounds"),
-            "round_gates": s.get("round_gates"),
-            "aqe_off_high_median_sec": s.get("aqe_off_high_median_sec"),
-        }
-    except (OSError, ValueError):
-        ev["scaling"] = None
-    return ev
+def run_workload(workload: str) -> dict:
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(SEED), "--seconds", "10", "--trace", "0"]
+    out = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True)
+    lines = out.stdout.strip().splitlines()
+    if out.returncode == 0 and lines and lines[-1].startswith("{"):
+        return json.loads(lines[-1])
+    sys.stderr.write(out.stderr[-3000:])
+    sys.exit(f"bench: perfbench {workload} exited {out.returncode} "
+             "without a JSON line")
 
 
 def main() -> None:
-    from pdf_plumber_util_spark.session import get_spark
-
-    import __spark_entry__ as entry
-
-    probes: list[float | None] = []
-    waits: list[float] = []
-    segments: list[dict] = []
-    # gate on a quiet window rather than record a throttled artifact
-    _gate(probes, waits, "startup", segments=segments)
-    start_probe = probes[-1]
-
-    spark = get_spark(app_name="bench", cores=CPUS, shuffle_partitions=CPUS)
-    qmap = entry.queries()
-    qmap["curate_corpus"] = q_curate_corpus
-
-    # JVM/codegen warm-up on the smallest sf (excluded from timings)
-    qmap["flagship_body_text"](spark, "/root/testdata/sf0.001").count()
-    q_curate_corpus(spark, "/root/testdata/sf0.001").count()
-
-    # two full passes over the query set, min per query (see module doc);
-    # each pass starts gated on a healthy window (the warm-up above and
-    # pass-1 itself drain the burst budget). The shared lines cache is
-    # cleared between passes so every pass pays the full cold-cache
-    # pipeline exactly like the single-pass protocol of BENCH_r01-r03 —
-    # min-of-two removes throttle clamps and residual JIT, not cache
-    # effects
-    from pdf_plumber_util_spark.contract import clear_shared_lines
-
-    pass_secs: list[dict[str, float]] = []
-    n_docs = 0
-    for p in range(2):
-        clear_shared_lines()
-        spark.catalog.clearCache()
-        _gate(probes, waits, f"pass_{p + 1}", segments=segments)
-        timings: dict[str, float] = {}
-        for name in BENCH_QUERIES:
-            if name in EXPENSIVE:
-                _gate(probes, waits, f"{name}_p{p + 1}", refill_s=REFILL_S,
-                      segments=segments)
-            t0 = time.time()
-            df = qmap[name](spark, SF_DIR)
-            n = df.count()
-            timings[name] = round(time.time() - t0, 3)
-            if name == "flagship_body_text":
-                n_docs = n
-        pass_secs.append(timings)
-
-    # html-tokenizer end-to-end extraction on synthetic Common-Crawl-style
-    # pages (the north-rule workload: html -> words -> lines -> blocks ->
-    # boundaries -> body text); one warm-up pass then two gated timed
-    # passes — runs AFTER the headline queries so its warm-up drain
-    # cannot throttle them
-    from pdf_plumber_util_spark.plans.extract import extract_documents
-    from pdf_plumber_util_spark.sources.pages import synth_pages
-
-    n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "8000"))
-    n_extracted, extract_secs = 0, []
-    if n_pages > 0:
-        pages = synth_pages(spark, n_pages, partitions=CPUS * 4).persist()
-        pages.count()
-        extract_documents(pages.limit(256)).count()
-        for p in range(2):
-            _gate(probes, waits, f"html_pass_{p + 1}", refill_s=REFILL_S,
-                  segments=segments)
-            t0 = time.time()
-            n_extracted = extract_documents(pages).count()
-            extract_secs.append(time.time() - t0)
-        pages.unpersist()
-    extract_sec = min(extract_secs) if extract_secs else 0.0
-
-    # third gated cold attempt for the headline flagship number
-    clear_shared_lines()
-    spark.catalog.clearCache()
-    _gate(probes, waits, "flagship_p3", refill_s=REFILL_S,
-          segments=segments)
-    t0 = time.time()
-    n_docs = qmap["flagship_body_text"](spark, SF_DIR).count()
-    flag_p3 = round(time.time() - t0, 3)
-
-    best = {
-        name: min(ps[name] for ps in pass_secs) for name in BENCH_QUERIES
-    }
-    best["flagship_body_text"] = min(best["flagship_body_text"], flag_p3)
-    total = sum(best.values())
-    # the BENCH_r01-r03 query set (curate_corpus joined in round 4) —
-    # reported separately so round-over-round totals stay comparable
-    total_r03 = sum(v for k, v in best.items() if k != "curate_corpus")
-    flag_sec = best["flagship_body_text"]
-    probes.append(_probe())
-    result = {
-        "metric": "flagship_docs_per_sec",
-        "value": round(total, 3),
-        "unit": "sec",
-        "queries": best,
-        "sf": SF_DIR,
-        "cpus": CPUS,
-        "flagship_docs": n_docs,
-        "flagship_docs_per_sec": round(n_docs / flag_sec, 2) if flag_sec else None,
-        "html_extract_docs": n_extracted,
-        "html_extract_sec": round(extract_sec, 3),
-        "html_extract_docs_per_sec": (
-            round(n_extracted / extract_sec, 2) if extract_sec else None
-        ),
-        "total_r03_set_sec": round(total_r03, 3),
-        "pass_totals_sec": [
-            round(sum(ps.values()), 3) for ps in pass_secs
-        ],
-        "per_pass_queries_sec": pass_secs,
-        "flagship_third_attempt_sec": flag_p3,
-        "html_extract_passes_sec": [round(s, 3) for s in extract_secs],
-        "refill_idle_s": REFILL_S,
-        "host_capacity_M": start_probe,
-        "capacity_probes_M": probes,
-        "capacity_gate_M": CAP_GATE_M,
-        "gate_wait_s": waits,
-        "gate_evidence": _gate_evidence(segments, probes, waits),
-    }
-    clear_shared_lines()
-    print(json.dumps(result))
+    runs = {w: run_workload(w) for w in WORKLOADS}
+    with open(os.path.join(REPO, ledger_path("extract_html"))) as fh:
+        cpus = json.load(fh)["cores"]
+    line = headline(runs, cpus)
+    assert len(line) <= MAX_CHARS, len(line)
+    print(line)
 
 
 if __name__ == "__main__":

@@ -31,7 +31,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests")
     yield s
     from pdf_plumber_util_spark.contract import clear_shared_lines
 

@@ -4,43 +4,29 @@ No real multi-node cluster exists in this sandbox, so the north-rule's
 N -> 4N executor criterion is evidenced by running the SAME job on the
 SAME input at local[N] and local[4N].
 
-Methodology (round-2 protocol; symmetric by construction):
-  * Interleaved A/B rounds of fresh JVMs so slow environmental drift hits
-    both levels equally. Per JVM: `warmups` discarded passes then `reps`
-    timed passes — the SAME ex-ante counts at BOTH levels (round 1
-    discarded more passes only at the high level after observing slow
-    first passes there; the judge's advice flagged that as a selection-
-    bias risk, so the asymmetry is gone).
-  * Both medians are reported: the all-passes median (headline) and the
+Methodology (symmetric by construction):
+  * Interleaved rounds of fresh JVMs so slow environmental drift hits
+    both levels equally; odd rounds run (4N, N) instead of (N, 4N), so
+    any penalty the first level leaves for the second alternates sides
+    (ABBA) and cancels in the median of the per-round ratios. Per JVM:
+    WARMUPS discarded passes then `timed_reps` timed passes, the same
+    ex-ante counts at BOTH levels.
+  * Both medians are reported: the all-passes median and the
     steady-state median (per-JVM passes after the first timed pass,
-    dropped at BOTH levels by the same ex-ante rule). Round-1 evidence
-    showed a per-JVM settling effect at higher parallelism that extra
-    warm-ups do not fully absorb; the bigger default input (96k pages,
-    2x round 1) amortizes it into the timed window instead.
-  * The lines cache is cleared between passes so every timed pass does
-    the full pipeline (tokenize -> lines -> rules -> blocks -> boundaries
+    dropped at BOTH levels by the same ex-ante rule).
+  * The cache is cleared between passes so every timed pass does the
+    full pipeline (tokenize -> lines -> rules -> blocks -> boundaries
     -> body) from the parquet scan.
-  * AQE is ON for the headline: it is the production session default, and
-    round 1 measured it FASTER at the high level (66.8 s vs 82.5 s median
-    at local[8]) — its driver-side re-planning cost is dwarfed by the
-    skew/coalesce wins even at benchmark scale. An AQE-off reference at
-    the high level is still recorded for comparison.
-  * Default levels are local[2] -> local[8]: this sandbox exposes 32 SMT
-    threads on ~22 effective cores with host-level throttling that
-    fluctuates on ~hour timescales, and the squeeze hits high-parallelism
-    runs first. 2->8 stays deep inside physical capacity even during
-    moderate throttle, which is the honest analog of N -> 4N *executors*
-    (executors on a real cluster get dedicated cores; they don't share
-    SMT siblings or a throttled host budget). A capacity probe gates each
-    round on a quiet window.
+  * AQE is ON for the headline (the production session default); an
+    AQE-off reference at the high level is recorded for comparison.
+  * Default levels: N = nproc / 4 (at least 1) and 4N, from the CPUs this
+    process may run on, so the high level uses the whole host and no more.
 
-scaling_efficiency = (throughput_4N / throughput_N) / 4.
+scaling_efficiency = (throughput_4N / throughput_N) / 4, computed within
+each round and reported as the median over rounds.
 
-Usage: python tools/scaling_bench.py [n_docs] [N] [timed_reps] [--record]
-  (per JVM: WARMUPS discarded + timed_reps timed passes, both levels;
-   ROUNDS interleaved A/B rounds)
-Prints a summary JSON line; --record appends the evidence table to
-BASELINE.md.
+Usage: python tools/scaling_bench.py [n_docs] [N] [timed_reps]
+Prints a summary JSON line; per-JVM results go to stderr as they land.
 """
 
 from __future__ import annotations
@@ -54,8 +40,8 @@ import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-WARMUPS = int(os.environ.get("SPARK_GRAFT_SCALE_WARMUPS", "2"))
-ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALE_ROUNDS", "2"))
+WARMUPS = 2
+ROUNDS = 2
 
 RUNNER = r"""
 import json, sys, time
@@ -85,107 +71,19 @@ print(json.dumps({{"cores": cores, "docs": n, "secs": secs}}))
 """
 
 
-SPIN = "import time;t=time.time();n=0\nwhile time.time()-t<5: n+=1\nprint(n)"
-
-
-def cpu_capacity(procs: int = 16) -> float:
-    """Millions of pure-Python spin iterations/5 s across `procs`
-    processes — a host-throttling probe. Healthy sandbox: ~250 M+ at 16;
-    throttled windows have been observed at ~160 M (38% down), which
-    squeezes high-parallelism runs first and corrupts the N->4N ratio."""
-    ps = [subprocess.Popen([sys.executable, "-c", SPIN], stdout=subprocess.PIPE)
-          for _ in range(procs)]
-    return sum(int(p.communicate()[0]) for p in ps) / 1e6
-
-
-def wait_for_quiet(threshold_m: float, max_wait_s: float = 1800) -> float:
-    """Block until the capacity probe clears `threshold_m` (or give up
-    after max_wait_s); returns the last probe value."""
-    import time as _t
-    deadline = _t.time() + max_wait_s
-    cap = cpu_capacity()
-    while cap < threshold_m and _t.time() < deadline:
-        print(json.dumps({"throttled_capacity_M": round(cap, 1),
-                          "waiting_s": 60}), file=sys.stderr, flush=True)
-        _t.sleep(60)
-        cap = cpu_capacity()
-    return cap
-
-
 def _interleaved(pages_dir: str, low: int, high: int, rounds: int,
-                 reps: int) -> dict:
-    """A/B/A/B… rounds of fresh JVMs, symmetric warm-up/timed counts.
-
-    SELF-GATING (round-3 verdict #4): a single pre-round probe cannot
-    certify a window, so EVERY level's start is gated — the probe waits
-    (up to SPARK_GRAFT_SCALE_GATE_WAIT s) for capacity >= the gate before
-    launching that level's JVM. A round where any gate cannot be met is
-    REJECTED outright and re-attempted (up to SPARK_GRAFT_SCALE_MAX_RETRIES
-    extra attempts), so no recorded round ever started a level throttled;
-    the accepted/rejected probe trail is embedded in the artifact instead
-    of prose caveats after the fact.
-
-    RESERVE-AWARE (round-4): the sandbox quota has a hidden burst RESERVE
-    the spin probe cannot see (measured in round 4: a gated local[2]
-    level that passes its probe still drains the reserve for ~20 min of
-    sustained burn, and the local[8] level that follows runs starved —
-    its passes read 212/169/58 s as the reserve refills, collapsing the
-    within-round ratio to 0.37 on unchanged code). Two ex-ante controls:
-    (a) after each gate clears, idle SPARK_GRAFT_SCALE_REFILL s before
-    launching the level's JVM (the bench.py lesson); (b) ABBA
-    counterbalancing — odd rounds run (high, low) instead of (low, high),
-    so the reserve-drain penalty the first level imposes on the second
-    alternates sides and cancels in the median of per-round ratios."""
+                 reps: int) -> tuple[int, dict[int, list[list[float]]]]:
+    """ABBA rounds of fresh JVMs, symmetric warm-up/timed counts."""
     jvm_secs: dict[int, list[list[float]]] = {low: [], high: []}
-    caps: list[dict] = []
     docs = 0
-    threshold = float(os.environ.get("SPARK_GRAFT_CAP_THRESHOLD_M", "220"))
-    gate_wait = float(os.environ.get("SPARK_GRAFT_SCALE_GATE_WAIT", "600"))
-    refill_s = float(os.environ.get("SPARK_GRAFT_SCALE_REFILL", "90"))
-    max_attempts = rounds + int(
-        os.environ.get("SPARK_GRAFT_SCALE_MAX_RETRIES", "4")
-    )
-    attempts = 0
-    import time as _time
-
-    while len(jvm_secs[low]) < rounds and attempts < max_attempts:
-        attempts += 1
-        round_caps: list[float] = []
-        results: dict[int, dict] = {}
-        ok = True
-        # ABBA: alternate level order between rounds so the burst-reserve
-        # drain the first level imposes on the second cancels across the
-        # per-round-ratio median
-        order = (low, high) if len(jvm_secs[low]) % 2 == 0 else (high, low)
+    for r in range(rounds):
+        order = (low, high) if r % 2 == 0 else (high, low)
         for cores in order:
-            cap = wait_for_quiet(threshold, max_wait_s=gate_wait)
-            round_caps.append(round(cap, 1))
-            if cap < threshold:
-                ok = False
-                break
-            _time.sleep(refill_s)  # let the burst reserve refill
-            results[cores] = run_level(
-                pages_dir, cores, reps=reps, warmups=WARMUPS
-            )
-            print(json.dumps(results[cores]), file=sys.stderr, flush=True)
-        caps.append({"attempt": attempts, "probes_M": round_caps,
-                     "order": list(order), "accepted": ok})
-        if not ok:
-            print(json.dumps({"rejected_round": attempts,
-                              "probes_M": round_caps}),
-                  file=sys.stderr, flush=True)
-            continue
-        for cores in (low, high):
-            jvm_secs[cores].append(results[cores]["secs"])
-            docs = results[cores]["docs"]
-    if len(jvm_secs[low]) < rounds:
-        raise RuntimeError(
-            f"only {len(jvm_secs[low])}/{rounds} rounds cleared the "
-            f"capacity gate ({threshold} M) in {max_attempts} attempts — "
-            "window too hostile; re-run later rather than record"
-        )
-    return {"docs": docs, "jvm_secs": jvm_secs, "capacity_probes_M": caps,
-            "rejected_rounds": attempts - rounds}
+            res = run_level(pages_dir, cores, reps=reps, warmups=WARMUPS)
+            print(json.dumps(res), file=sys.stderr, flush=True)
+            jvm_secs[cores].append(res["secs"])
+            docs = res["docs"]
+    return docs, jvm_secs
 
 
 def generate_pages(n_docs: int, out_dir: str) -> None:
@@ -193,7 +91,7 @@ def generate_pages(n_docs: int, out_dir: str) -> None:
     from pdf_plumber_util_spark.session import get_spark
     from pdf_plumber_util_spark.sources.pages import synth_pages
 
-    spark = get_spark(app_name="gen", cores=16, shuffle_partitions=16)
+    spark = get_spark(app_name="gen")
     synth_pages(spark, n_docs, partitions=128).write.mode("overwrite").parquet(out_dir)
     spark.stop()
 
@@ -212,10 +110,9 @@ def run_level(pages_dir: str, cores: int, reps: int, warmups: int = WARMUPS,
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if a != "--record"]
-    record = "--record" in sys.argv
+    args = sys.argv[1:]
     n_docs = int(args[0]) if len(args) > 0 else 96000
-    low = int(args[1]) if len(args) > 1 else 2
+    low = int(args[1]) if len(args) > 1 else max(1, len(os.sched_getaffinity(0)) // 4)
     reps = int(args[2]) if len(args) > 2 else 3
     high = low * 4
 
@@ -223,16 +120,9 @@ def main() -> None:
     if not os.path.exists(os.path.join(pages_dir, "_SUCCESS")):
         generate_pages(n_docs, pages_dir)
 
-    inter = _interleaved(pages_dir, low, high, rounds=ROUNDS, reps=reps)
-    jvm_secs = inter["jvm_secs"]
-    # the AQE-off reference gets the same start gate as the rounds
-    wait_for_quiet(
-        float(os.environ.get("SPARK_GRAFT_CAP_THRESHOLD_M", "220")),
-        max_wait_s=float(os.environ.get("SPARK_GRAFT_SCALE_GATE_WAIT", "600")),
-    )
+    docs, jvm_secs = _interleaved(pages_dir, low, high, rounds=ROUNDS, reps=reps)
     aqe_off_ref = run_level(pages_dir, high, 2, aqe="false")
 
-    docs = inter["docs"]
     all_passes = {c: [s for jvm in jvm_secs[c] for s in jvm] for c in jvm_secs}
     # steady state: symmetric ex-ante rule — drop each JVM's FIRST timed
     # pass at BOTH levels (identical to all-passes when reps == 1)
@@ -252,11 +142,11 @@ def main() -> None:
     # rounds median re-introduces it (e.g. drift between rounds can put
     # the pooled low-level median in one round's regime and the
     # high-level median in the other's, biasing the ratio in either
-    # direction even when every individual round clears the gate). The
-    # per-round ratio uses ALL timed passes and discards nothing.
+    # direction). The per-round ratio uses ALL timed passes and discards
+    # nothing.
     round_effs = [
-        (statistics.median(l2) / statistics.median(l8)) / (high / low)
-        for l2, l8 in zip(jvm_secs[low], jvm_secs[high])
+        (statistics.median(lo) / statistics.median(hi)) / (high / low)
+        for lo, hi in zip(jvm_secs[low], jvm_secs[high])
     ]
     eff_rounds = statistics.median(round_effs)
     summary = {
@@ -277,44 +167,8 @@ def main() -> None:
         "jvm_runs_sec": {str(c): [[round(x, 2) for x in jvm] for jvm in jvm_secs[c]]
                          for c in jvm_secs},
         "aqe_off_high_median_sec": round(statistics.median(aqe_off_ref["secs"]), 2),
-        "round_gates": inter["capacity_probes_M"],
-        "rejected_rounds": inter["rejected_rounds"],
     }
     print(json.dumps(summary))
-
-    if record:
-        n_timed = len(all_passes[low])
-        with open(os.path.join(REPO, "BASELINE.md"), "a") as f:
-            f.write(
-                "\n## Recorded scaling evidence (this sandbox, round-2 protocol)\n\n"
-                f"Flagship end-to-end extraction (tokenize -> lines -> blocks ->\n"
-                f"boundaries -> body text), {docs} synthetic pages, AQE ON (the\n"
-                f"production default; round 1 measured it faster at the high\n"
-                f"level). Interleaved A/B rounds of fresh JVMs, SYMMETRIC ex-ante\n"
-                f"counts at both levels: {WARMUPS} discarded warm-ups + "
-                f"{summary['timed_per_jvm']} timed passes per JVM,\n"
-                f"{ROUNDS} rounds ({n_timed} timed passes per level), cache "
-                f"cleared between passes.\n\n"
-                "| local[N] | median sec (all) | docs/sec | median sec (steady) |\n"
-                "|---|---|---|---|\n"
-                f"| {low} | {med_all[low]:.2f} | {docs/med_all[low]:.1f} | {med_st[low]:.2f} |\n"
-                f"| {high} | {med_all[high]:.2f} | {docs/med_all[high]:.1f} | {med_st[high]:.2f} |\n\n"
-                f"**scaling efficiency {low}->{high} = {eff_rounds:.3f}** "
-                f"(median of the per-round ratios {[round(e, 3) for e in round_effs]};\n"
-                f"each round pairs adjacent-in-time A/B JVMs so slow host drift\n"
-                f"between rounds cancels — see tools/scaling_bench.py). Secondary\n"
-                f"views: pooled all-passes median = {eff_all:.3f}; pooled\n"
-                f"steady-state median (per-JVM first timed pass dropped at BOTH\n"
-                f"levels) = {eff_st:.3f}. Gate: >= 0.8.\n"
-                f"AQE-off reference at local[{high}]: "
-                f"{summary['aqe_off_high_median_sec']} s median.\n"
-                f"Per-JVM pass sequences: {summary['jvm_runs_sec']}\n"
-                f"Round gates (per-level start probes, M iters/5s, gate "
-                f"{os.environ.get('SPARK_GRAFT_CAP_THRESHOLD_M', '220')} M; "
-                f"rounds failing a gate were rejected and re-attempted, "
-                f"never recorded): {summary['round_gates']}; "
-                f"rejected rounds: {summary['rejected_rounds']}\n"
-            )
 
 
 if __name__ == "__main__":
