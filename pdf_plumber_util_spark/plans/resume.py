@@ -34,6 +34,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import DEFAULT, EngineConfig
+
 BUCKET_COL = "url_bucket"
 SIDECAR = "_sidecar"
 
@@ -134,7 +136,8 @@ def publish_bucket(spark: SparkSession, sidecar_dir: str, meta: dict) -> None:
 
 
 def run_resumable(pages: DataFrame, spark: SparkSession, out_dir: str,
-                  n_buckets: int = 8, cfg=None) -> list[dict]:
+                  n_buckets: int = 8,
+                  cfg: EngineConfig = DEFAULT) -> list[dict]:
     """Resumable end-to-end run: skip committed buckets, land every
     remaining bucket in ONE dynamic-partition-overwrite job, audit the
     landed files, publish one sidecar marker per bucket."""
@@ -151,7 +154,7 @@ def run_resumable(pages: DataFrame, spark: SparkSession, out_dir: str,
         int(r[BUCKET_COL]): r["n_in"]
         for r in todo.groupBy(BUCKET_COL).agg(F.count("*").alias("n_in")).collect()
     }
-    docs = with_bucket(extract_documents(todo.drop(BUCKET_COL)), n_buckets)
+    docs = with_bucket(extract_documents(todo.drop(BUCKET_COL), cfg), n_buckets)
 
     t0 = time.time()
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")

@@ -1,8 +1,12 @@
-"""SparkSession factory tuned for the extraction workload.
+"""The one SparkSession factory, for every entry point of the package.
 
-Local-mode defaults mirror what we'd set cluster-side: AQE on (runtime
-skew-join + coalesce), Arrow for all pandas-UDF traffic, shuffle partitions
-proportional to cores. At 100 TB the same knobs move to spark-submit conf.
+Every session gets ``FIXED_CONF``: the settings the plans rely on (AQE,
+url co-partitioning, Arrow, UTC, codegen cache, call-site capture off).
+When ``get_spark`` starts the JVM itself (a plain ``python`` process,
+pytest, perfbench) it also sizes the session to this host: ``local[cores]``,
+one shuffle partition per core, UI off and a fixed 2g heap. Under
+spark-submit the JVM already runs, and master, shuffle partitions, heap
+and UI are spark-submit's own flags.
 """
 
 from __future__ import annotations
@@ -11,10 +15,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Whole-stage codegen settings, fixed for every session the package makes
-# (get_spark here, and the cluster builder in job.py). Compile counts are
-# CodegenMetrics.METRIC_COMPILATION_TIME per extract_documents call,
-# 4-core local session.
+# Every fixed setting, applied by every session the package makes.
+# Whole-stage codegen (compile counts are CodegenMetrics.
+# METRIC_COMPILATION_TIME per extract_documents call, 4-core local session):
 # - cache.maxEntries: the JVM-wide generated-class cache (an LRU, default
 #   100) is smaller than the 205-325 distinct classes one extract call
 #   compiles, so every class was evicted before its next use and each
@@ -28,91 +31,57 @@ from pyspark.sql import SparkSession
 #   identical operator code then misses the cache (83 compiles on the
 #   first 600-page call after the 64-page ones, 11 without the id).
 # With both, the same five calls compile 251, 0, 11, 0, 0 classes.
-CODEGEN_CONF = {
+# Call-site capture: PySpark 4.1 wraps every pyspark.sql.functions call
+# to record its Python call site for error messages: each call looks up
+# the active session, reads its conf, and sets and clears
+# PySparkCurrentOrigin over py4j. Building one extract_documents plan
+# makes 499 such calls; with capture off (and the analysis tail built over
+# its cache leaf) the build's py4j calls fell from about 9,900 to about
+# 3,800 (600 pages). Errors then carry no Python file:line in their
+# DataFrame query context. PySpark reads the setting once per process,
+# from the first active session it sees.
+FIXED_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # the engine's pipelines hash-partition the word stream by url and
+    # rely on every downstream join keyed (url, ...) reusing that
+    # partitioning; the default (true) forces a full-join-key re-shuffle
+    # of BOTH sides even when both are url-co-partitioned
+    "spark.sql.requireAllClusterKeysForCoPartition": "false",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.session.timeZone": "UTC",
     "spark.sql.codegen.cache.maxEntries": "2000",
     "spark.sql.codegen.useIdInClassName": "false",
-}
-
-# Every fixed setting, for each builder that starts a session: the codegen
-# settings above, and PySpark's call-site capture turned off. PySpark 4.1
-# wraps every pyspark.sql.functions call to record its Python call site
-# for error messages: each call looks up the active session, reads its
-# conf, and sets and clears PySparkCurrentOrigin over py4j. Building one
-# extract_documents plan makes 499 such calls; with capture off (and the
-# analysis tail built over its cache leaf) the build's py4j calls fell
-# from about 9,900 to about 3,800 (600 pages). Errors then carry no Python
-# file:line in their DataFrame query context. PySpark reads the setting
-# once per process, from the first active session it sees.
-FIXED_CONF = {
-    **CODEGEN_CONF,
     "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
+# The driver heap of a session get_spark starts, pinned (-Xms = -Xmx) so
+# it does not grow under G1's ergonomics during the first passes, and not
+# pre-touched, so resident memory is what the plans actually touch. It is
+# the heap every perfbench number is measured at.
+DRIVER_HEAP = "2g"
 
-def get_spark(
-    app_name: str = "pdf_plumber_util_spark",
-    cores: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-    if shuffle_partitions is None:
-        # one shuffle partition per core locally; cluster-side this scales
-        # with executor count (set via spark-submit) and AQE coalesces.
-        shuffle_partitions = cores
-    builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # the engine's pipelines hash-partition the word stream by url and
-        # rely on every downstream join keyed (url, ...) reusing that
-        # partitioning; the default (true) forces a full-join-key
-        # re-shuffle of BOTH sides even when both are url-co-partitioned
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config(map=FIXED_CONF)
-    )
-    # Pin the initial heap to the max and pre-touch it: Spark only passes
-    # -Xmx, so the heap otherwise grows from a small initial size under
-    # G1's adaptive ergonomics for the first minutes of a job — measured
-    # as a 1.3-1.4x inflated first pass whose length scales with
-    # allocation rate (worse at higher parallelism). At cluster scale the
-    # same flags go on executor JVMs. Committing the full heap up front
-    # can fail on small hosts (CI runners/laptops), so it auto-disables
-    # unless MemAvailable comfortably covers the heap; SPARK_GRAFT_PRETOUCH
-    # =1/0 forces it either way. Like every config here, it only takes
-    # effect for the JVM-creating call — getOrCreate() reusing a live
-    # session ignores it.
-    if _pretouch_ok(os.environ.get("SPARK_DRIVER_MEM", "8g")):
-        builder = builder.config(
-            "spark.driver.extraJavaOptions",
-            "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "8g")
-            + " -XX:+AlwaysPreTouch",
-        )
+
+def get_spark(app_name: str = "pdf_plumber_util_spark",
+              cores: int | None = None) -> SparkSession:
+    """The package's session. ``cores`` sizes a session this call starts
+    (default ``SPARK_GRAFT_CPUS``, else the CPUs this process may run
+    on); a live session, or one under spark-submit, keeps its own."""
+    builder = SparkSession.builder.appName(app_name).config(map=FIXED_CONF)
+    # spark-submit starts the JVM before Python and hands PySpark its
+    # gateway port (pyspark/java_gateway.py); without it PySpark starts a
+    # local JVM from this builder's settings
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        if cores is None:
+            cores = int(os.environ.get("SPARK_GRAFT_CPUS")
+                        or len(os.sched_getaffinity(0)))
+        builder = builder.master(f"local[{cores}]").config(map={
+            "spark.sql.shuffle.partitions": str(cores),
+            "spark.driver.memory": DRIVER_HEAP,
+            "spark.driver.extraJavaOptions": f"-Xms{DRIVER_HEAP}",
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+        })
     return builder.getOrCreate()
-
-
-def _pretouch_ok(heap: str) -> bool:
-    forced = os.environ.get("SPARK_GRAFT_PRETOUCH")
-    if forced is not None:
-        return forced != "0"
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}.get(heap[-1].lower())
-    heap_bytes = int(heap[:-1]) * mult if mult else int(heap)
-    try:
-        with open("/proc/meminfo") as fh:
-            for line in fh:
-                if line.startswith("MemAvailable:"):
-                    avail = int(line.split()[1]) * 1024
-                    # 1.25x margin: the JVM needs metaspace/stacks too
-                    return avail > heap_bytes * 1.25
-    except OSError:
-        pass
-    return False

@@ -4,6 +4,8 @@ assert wiring + artifacts, not semantics (covered by the oracle suite)."""
 
 import json
 import os
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
@@ -52,6 +54,19 @@ def test_cli_process(spark, tmp_path, capsys):
     body = spark.read.parquet(arts["body"])
     rows = body.collect()
     assert all(r["chars_extracted"] > 0 for r in rows)
+
+
+def test_cli_runs_as_a_file_from_any_directory(tmp_path):
+    """spark-submit runs cli.py as a file, not as a module: its relative
+    imports must resolve with neither the repo root as the working
+    directory nor the package on PYTHONPATH."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(cli.__file__), "process", "--help"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=60,
+    )
+    assert out.returncode == 0, out.stderr
+    assert "--resumable" in out.stdout
 
 
 def test_cli_page_range_and_bad_profile(spark, tmp_path, capsys):

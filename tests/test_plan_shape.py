@@ -497,10 +497,11 @@ def test_warm_extract_compiles_no_classes(spark):
     identical extract_documents call re-runs no Janino compile (with the
     default 100-entry cache it recompiled 200-330 classes per call)."""
     from pdf_plumber_util_spark.plans.extract import extract_documents
-    from pdf_plumber_util_spark.session import CODEGEN_CONF
+    from pdf_plumber_util_spark.session import FIXED_CONF
 
-    for key, value in CODEGEN_CONF.items():
-        assert spark.conf.get(key) == value, key
+    for key in ("spark.sql.codegen.cache.maxEntries",
+                "spark.sql.codegen.useIdInClassName"):
+        assert spark.conf.get(key) == FIXED_CONF[key], key
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
     def compiles() -> int:

@@ -2,6 +2,10 @@
 (operators/webtext.py): URL canonicalization corner cases, Gopher gate
 boundaries, C4 line filtering, PII scrubbing."""
 
+import glob
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -203,6 +207,18 @@ def test_block_boilerplate_flags_nav_not_prose(spark):
     ).collect()[0][0]
 
 
+def _midpage_links_page(spark):
+    """One page with a related-links strip between its prose paragraphs."""
+    prose = [
+        f"<p>Body paragraph {i} carries plenty of ordinary prose words"
+        f" with no anchors at all in this sentence of the page.</p>"
+        for i in range(4)
+    ]
+    links = "<h3><a>Related</a> <a>Trending</a> <a>Popular</a> <a>Archive</a></h3>"
+    html = "".join(prose[:2]) + links + "".join(prose[2:])
+    return spark.createDataFrame([("d0", html.encode())], "url string, html binary")
+
+
 def test_extract_documents_drop_boilerplate_optin(spark):
     """extract_documents(drop_boilerplate=True) removes a MID-PAGE
     related-links strip — the case the geometric header/footer zones
@@ -211,14 +227,7 @@ def test_extract_documents_drop_boilerplate_optin(spark):
     from pdf_plumber_util_spark.config import EngineConfig
     from pdf_plumber_util_spark.plans.extract import extract_documents
 
-    prose = [
-        f"<p>Body paragraph {i} carries plenty of ordinary prose words"
-        f" with no anchors at all in this sentence of the page.</p>"
-        for i in range(4)
-    ]
-    links = "<h3><a>Related</a> <a>Trending</a> <a>Popular</a> <a>Archive</a></h3>"
-    html = "".join(prose[:2]) + links + "".join(prose[2:])
-    pages = spark.createDataFrame([("d0", html.encode())], "url string, html binary")
+    pages = _midpage_links_page(spark)
 
     plain = extract_documents(pages).collect()[0]
     assert "Trending" in plain["body_text"]
@@ -230,6 +239,32 @@ def test_extract_documents_drop_boilerplate_optin(spark):
     assert "Body paragraph 2" in stripped["body_text"]
     assert stripped["n_blocks_dropped"] == plain["n_blocks_dropped"] + 1
     assert stripped["n_blocks_kept"] == plain["n_blocks_kept"] - 1
+
+
+def test_cli_process_resumable_drop_boilerplate(spark, tmp_path, capsys):
+    """cli process --resumable lands the body table with the run's config
+    (the mid-page links strip is dropped under --drop-boilerplate),
+    records the dropped block in the bucket sidecar, and a rerun skips
+    every committed bucket."""
+    from pdf_plumber_util_spark import cli
+
+    pages = str(tmp_path / "pages")
+    _midpage_links_page(spark).write.parquet(pages)
+    out = str(tmp_path / "out")
+    argv = ["process", "--resumable", "--drop-boilerplate", "--buckets", "4",
+            "--input", pages, "--output", out]
+
+    assert cli.main(argv) == 0
+    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert first["buckets_processed"] == 1 and first["docs"] == 1
+    body = spark.read.parquet(out).collect()[0]["body_text"]
+    assert "Trending" not in body and "Body paragraph 2" in body
+    (marker,) = glob.glob(os.path.join(out, "_sidecar", "*.json"))
+    assert json.load(open(marker))["blocks_dropped"] >= 1
+
+    assert cli.main(argv) == 0
+    again = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert again["buckets_processed"] == 0
 
 
 def test_gopher_stop_hits_counts_distinct_stopwords(spark):

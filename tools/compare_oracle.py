@@ -43,7 +43,7 @@ def main() -> int:
     import __spark_entry__ as entry
     from pdf_plumber_util_spark.session import get_spark
 
-    spark = get_spark(app_name="compare_oracle", cores=8, shuffle_partitions=8)
+    spark = get_spark(app_name="compare_oracle")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

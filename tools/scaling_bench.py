@@ -16,7 +16,9 @@ Methodology (symmetric by construction):
     dropped at BOTH levels by the same ex-ante rule).
   * The cache is cleared between passes so every timed pass does the
     full pipeline (tokenize -> lines -> rules -> blocks -> boundaries
-    -> body) from the parquet scan.
+    -> body) from the parquet scan, and each pass writes every output
+    column to the noop sink: a count() would let Catalyst prune the
+    analysis tail and time only the tokenizer and the lines.
   * AQE is ON for the headline (the production session default); an
     AQE-off reference at the high level is recorded for comparison.
   * Default levels: N = nproc / 4 (at least 1) and 4N, from the CPUs this
@@ -25,7 +27,7 @@ Methodology (symmetric by construction):
 scaling_efficiency = (throughput_4N / throughput_N) / 4, computed within
 each round and reported as the median over rounds.
 
-Usage: python tools/scaling_bench.py [n_docs] [N] [timed_reps]
+Usage: python tools/scaling_bench.py [n_docs=1200] [N] [timed_reps=2]
 Prints a summary JSON line; per-JVM results go to stderr as they land.
 """
 
@@ -50,23 +52,20 @@ from pdf_plumber_util_spark.session import get_spark
 from pdf_plumber_util_spark.plans.extract import extract_documents
 
 cores = {cores}
-spark = get_spark(app_name="scale", cores=cores, shuffle_partitions=cores)
+spark = get_spark(app_name="scale", cores=cores)
 spark.conf.set("spark.sql.adaptive.enabled", {aqe!r})
 pages = spark.read.parquet({pages_dir!r})
 
 def one_pass():
     spark.catalog.clearCache()   # full pipeline every pass
     t0 = time.time()
-    n = extract_documents(pages).count()
-    return n, time.time() - t0
+    extract_documents(pages).write.format("noop").mode("overwrite").save()
+    return time.time() - t0
 
 for _ in range({warmups}):
     one_pass()
-secs = []
-n = 0
-for _ in range({reps}):
-    n, dt = one_pass()
-    secs.append(dt)
+secs = [one_pass() for _ in range({reps})]
+n = extract_documents(pages).count()
 print(json.dumps({{"cores": cores, "docs": n, "secs": secs}}))
 """
 
@@ -111,9 +110,9 @@ def run_level(pages_dir: str, cores: int, reps: int, warmups: int = WARMUPS,
 
 def main() -> None:
     args = sys.argv[1:]
-    n_docs = int(args[0]) if len(args) > 0 else 96000
+    n_docs = int(args[0]) if len(args) > 0 else 1200
     low = int(args[1]) if len(args) > 1 else max(1, len(os.sched_getaffinity(0)) // 4)
-    reps = int(args[2]) if len(args) > 2 else 3
+    reps = int(args[2]) if len(args) > 2 else 2
     high = low * 4
 
     pages_dir = os.path.join(tempfile.gettempdir(), f"scale_pages_{n_docs}")
