@@ -135,24 +135,15 @@ def form_blocks(lines: DataFrame, rules: DataFrame, segments: DataFrame | None =
     )
 
     def cov(col: str, out_val: str | None, out_cov: str) -> DataFrame:
-        per = (
-            segs.filter(F.col(col).isNotNull())
-            .groupBy("url", "page", "block_id", col)
-            .agg(F.count("*").alias("c"), F.min("_spos").alias("fs"))
+        # the null-value group adds to the block's segment total only
+        per = segs.groupBy("url", "page", "block_id", col).agg(
+            F.count("*").alias("c"), F.min("_spos").alias("fs")
         )
-        total = segs.groupBy("url", "page", "block_id").agg(F.count("*").alias("tot"))
-        top = per.groupBy("url", "page", "block_id").agg(
-            F.max_by(col, F.struct("c", -F.col("fs"))).alias("_val"),
-            F.max(F.struct("c", -F.col("fs")))["c"].alias("_cnt"),
+        order = F.when(F.col(col).isNotNull(), F.struct("c", -F.col("fs")))
+        return per.groupBy("url", "page", "block_id").agg(
+            *([F.max_by(col, order).alias(out_val)] if out_val else []),
+            (F.max(order)["c"] / F.sum("c")).alias(out_cov),
         )
-        out = top.join(total, ["url", "page", "block_id"]).select(
-            "url",
-            "page",
-            "block_id",
-            *( [F.col("_val").alias(out_val)] if out_val else [] ),
-            (F.col("_cnt") / F.col("tot")).alias(out_cov),
-        )
-        return out
 
     size_cov = cov("rounded_size", None, "size_coverage")
     font_cov = cov("font", "predominant_font", "font_coverage")

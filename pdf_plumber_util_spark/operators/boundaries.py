@@ -20,23 +20,32 @@ from pyspark.sql import functions as F
 from .spacing import classify_gaps
 
 
+def _base_spacing(lines: DataFrame) -> DataFrame:
+    """A10 as a column: ``base_spacing`` on every line, the most common
+    positive *unrounded* gap_before of its (url, page), preferring values
+    > 0.01; ties -> first seen in line order; null if the page has none."""
+    gap = F.col("gap_before")
+    per_gap = Window.partitionBy("url", "page", "gap_before")
+    order = F.when(
+        gap > 0, F.struct(F.count("*").over(per_gap), -F.min("line_number").over(per_gap))
+    )
+    page = Window.partitionBy("url", "page")
+    return lines.withColumn("_order", order).withColumn(
+        "base_spacing",
+        F.coalesce(
+            F.max_by("gap_before", F.when(gap > 0.01, F.col("_order"))).over(page),
+            F.max_by("gap_before", "_order").over(page),
+        ),
+    ).drop("_order")
+
+
 def page_base_spacing(lines: DataFrame) -> DataFrame:
-    """A10: per (url, page) the most common positive *unrounded* gap_before,
-    preferring values > 0.01; ties -> first seen in line order; 0 if none."""
-    sp = lines.filter(F.col("gap_before").isNotNull() & (F.col("gap_before") > 0)).select(
-        "url", "page", F.col("gap_before").alias("sp"), "line_number"
-    )
-    per = sp.groupBy("url", "page", "sp").agg(
-        F.count("*").alias("cnt"), F.min("line_number").alias("fs")
-    )
-    nz = per.filter(F.col("sp") > 0.01).groupBy("url", "page").agg(
-        F.max_by("sp", F.struct("cnt", -F.col("fs"))).alias("base_nz")
-    )
-    anymode = per.groupBy("url", "page").agg(
-        F.max_by("sp", F.struct("cnt", -F.col("fs"))).alias("base_any")
-    )
-    return anymode.join(nz, ["url", "page"], "left").select(
-        "url", "page", F.coalesce("base_nz", "base_any").alias("base_spacing")
+    """A10 per (url, page) with a positive gap: url, page, base_spacing."""
+    return (
+        _base_spacing(lines)
+        .filter(F.col("base_spacing").isNotNull())
+        .select("url", "page", "base_spacing")
+        .distinct()
     )
 
 
@@ -58,46 +67,36 @@ def header_footer_candidates(
     large_mult: float = 1.8,
 ) -> DataFrame:
     """H1/H2: traditional candidates. One row per candidate:
-    url, page, side ('header'|'footer'), y_coord, text, gap, line_number."""
-    df = _zones(lines, header_zone_pt, footer_zone_in)
+    url, page, side ('header'|'footer'), y_coord, text, gap, line_number,
+    vote_order. Each line's header and footer structs (null where the line
+    is no candidate) explode into rows."""
     w = Window.partitionBy("url", "page").orderBy("line_number")
+    top, bottom = F.col("bbox")["top"], F.col("bbox")["bottom"]
     df = (
-        df.withColumn("_next_top", F.lead(F.col("bbox")["top"]).over(w))
-        .withColumn("_prev_bottom", F.lag(F.col("bbox")["bottom"]).over(w))
-        .join(page_base_spacing(lines), ["url", "page"], "left")
+        _zones(_base_spacing(lines), header_zone_pt, footer_zone_in)
+        .withColumn("_next_top", F.lead(top).over(w))
+        .withColumn("_prev_bottom", F.lag(bottom).over(w))
     )
+    next_top, prev_bottom = F.col("_next_top"), F.col("_prev_bottom")
     thr = F.lit(large_mult) * F.coalesce("base_spacing", F.lit(0.0))
-    header = df.filter(
-        (F.col("bbox")["top"] < F.col("_header_max_y"))
-        & F.col("_next_top").isNotNull()
-        & ((F.col("_next_top") - F.col("bbox")["bottom"]) >= thr)
-    ).select(
-        "url",
-        "page",
-        F.lit("header").alias("side"),
-        F.col("bbox")["bottom"].alias("y_coord"),
-        "text",
-        (F.col("_next_top") - F.col("bbox")["bottom"]).alias("gap"),
-        "line_number",
-        F.col("line_number").alias("vote_order"),
+
+    def candidate(side: str, y, gap, vote_order):
+        return F.struct(F.lit(side).alias("side"), y.alias("y_coord"), "text",
+                        gap.alias("gap"), "line_number", vote_order.alias("vote_order"))
+
+    header = F.when(
+        (top < F.col("_header_max_y")) & next_top.isNotNull() & (next_top - bottom >= thr),
+        candidate("header", bottom, next_top - bottom, F.col("line_number")),
     )
-    footer = df.filter(
-        (F.col("bbox")["bottom"] > F.col("_footer_min_y"))
-        & F.col("_prev_bottom").isNotNull()
-        & ((F.col("bbox")["top"] - F.col("_prev_bottom")) >= thr)
-    ).select(
-        "url",
-        "page",
-        F.lit("footer").alias("side"),
-        F.col("bbox")["top"].alias("y_coord"),
-        "text",
-        (F.col("bbox")["top"] - F.col("_prev_bottom")).alias("gap"),
-        "line_number",
+    footer = F.when(
+        (bottom > F.col("_footer_min_y")) & prev_bottom.isNotNull() & (top - prev_bottom >= thr),
         # the reference scans footers bottom-up, so insertion (tie-break)
         # order within a page is reversed (analyzer.py:519-543)
-        (-F.col("line_number")).alias("vote_order"),
+        candidate("footer", top, top - prev_bottom, -F.col("line_number")),
     )
-    return header.unionByName(footer)
+    # array_compact types its elements non-null: the fields keep theirs
+    both = F.array_compact(F.array(header, footer))
+    return df.select("url", "page", F.explode(both).alias("_c")).select("url", "page", "_c.*")
 
 
 def contextual_header_footer_candidates(
@@ -161,30 +160,28 @@ def final_boundaries(candidates: DataFrame, page_heights: DataFrame) -> DataFram
 
     Args:
       candidates: header_footer_candidates() output (one side-tagged table).
-      page_heights: per-url default height table (url, doc_bottom).
-    Returns: url, header_bottom, footer_top.
+      page_heights: one row per url: url, doc_bottom (the footer default),
+        and any other per-url columns, which pass through.
+    Returns: url, header_bottom, footer_top, then page_heights' other
+    columns.
     """
-    pos = F.struct("page", "vote_order")
     per_y = candidates.groupBy("url", "side", "y_coord").agg(
-        F.count("*").alias("cnt"), F.min(pos).alias("fs")
+        F.count("*").alias("cnt"), F.min(F.struct("page", "vote_order")).alias("fs")
     )
-    votes = per_y.groupBy("url", "side").agg(
-        F.max_by(
-            "y_coord",
-            F.struct(
-                "cnt",
-                F.struct(
-                    (-F.col("fs")["page"]).alias("p"),
-                    (-F.col("fs")["vote_order"]).alias("l"),
-                ),
-            ),
-        ).alias("y")
-    )
-    pivoted = votes.groupBy("url").pivot("side", ["header", "footer"]).agg(F.first("y"))
-    return page_heights.join(pivoted, "url", "left").select(
+    order = F.struct("cnt", F.struct(
+        (-F.col("fs")["page"]).alias("p"), (-F.col("fs")["vote_order"]).alias("l")
+    ))
+
+    def vote(side: str):
+        return F.max_by("y_coord", F.when(F.col("side") == side, order))
+
+    votes = per_y.groupBy("url").agg(vote("header").alias("_header"), vote("footer").alias("_footer"))
+    rest = [c for c in page_heights.columns if c not in ("url", "doc_bottom")]
+    return page_heights.join(votes, "url", "left").select(
         "url",
-        F.coalesce("header", F.lit(0.0)).alias("header_bottom"),
-        F.coalesce("footer", "doc_bottom").alias("footer_top"),
+        F.coalesce("_header", F.lit(0.0)).alias("header_bottom"),
+        F.coalesce("_footer", "doc_bottom").alias("footer_top"),
+        *rest,
     )
 
 

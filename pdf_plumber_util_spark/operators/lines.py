@@ -89,9 +89,9 @@ def assign_line_ids_window(words: DataFrame, y_tol: float = 3.0) -> DataFrame:
     within y_tol of each other AND of the line start) — true for rendered
     webtext and the synthetic words tables; tests assert equality against
     the exact-anchor variant. Prefer this in pipelines: it needs no Python
-    stage and no extra exchange (FlatMapGroupsInPandas and Generate both
-    erase output partitioning in Spark 4, so the pandas variant costs two
-    additional shuffles downstream).
+    stage and no extra exchange (FlatMapGroupsInPandas erases output
+    partitioning in Spark 4, so the pandas variant costs two additional
+    shuffles downstream).
     """
     w = Window.partitionBy("url", "page").orderBy("top", "word_idx")
     brk = F.when(F.col("top") - F.lag("top").over(w) > y_tol, 1).otherwise(0)

@@ -2,10 +2,12 @@
 
 SURVEY.md §2 operators A4-A9 (rules derivation) and O1 (classifier),
 semantics from core/analyzer.py:66-251. All per-document aggregates are
-keyed by ``url`` so they stay on the url partitioning; the rules table is
-tiny per document and joined back (broadcast-sized in practice, but a
-same-key join on (url, size) stays co-partitioned — no broadcast needed
-since both sides are url-partitioned).
+keyed by ``url`` so they stay on the url partitioning. Each statistic is
+one two-level aggregate over one pass of the lines (by value, then by
+key); a side statistic (the non-zero mode, a context's line total) is a
+conditional ``max_by``/``sum`` of the second level, not a second
+aggregate joined back. ``classify_gaps`` joins the rules onto lines on
+(url, size), co-partitioned since both sides are url-partitioned.
 
 Mode tie-breaking: the reference uses Counter.most_common(1) whose ties
 resolve by insertion (= first-occurrence-in-document) order; we pin this
@@ -27,6 +29,22 @@ def _doc_ordered(lines: DataFrame) -> DataFrame:
     return lines.withColumn("_pos", F.row_number().over(w))
 
 
+def _gapped(lines: DataFrame, gap_rounding: float = 0.5) -> DataFrame:
+    """Document-ordered lines plus ``_gap``: the A6 rounded gap (below), or
+    null. The lag runs over every line, null sizes included."""
+    df = _doc_ordered(lines)
+    prev_size = F.lag("predominant_size").over(Window.partitionBy("url").orderBy("_pos"))
+    qualifies = (
+        F.col("predominant_size").isNotNull()
+        & F.col("predominant_size").eqNullSafe(prev_size)
+        & F.col("gap_before").isNotNull()
+        & (F.col("gap_before") > 0.01)
+    )
+    return df.withColumn(
+        "_gap", F.when(qualifies, round_to_nearest(F.col("gap_before"), gap_rounding))
+    )
+
+
 def contextual_gaps(lines: DataFrame, gap_rounding: float = 0.5) -> DataFrame:
     """A6 (analyzer.py:66-120): gaps between same-predominant-size adjacent
     lines (document-flattened order), rounded to gap_rounding, gap > 0.01.
@@ -34,32 +52,11 @@ def contextual_gaps(lines: DataFrame, gap_rounding: float = 0.5) -> DataFrame:
     Returns one row per qualifying gap:
       url, context_size, rounded_gap, _pos (document position of the line).
     """
-    df = _doc_ordered(lines)
-    w = Window.partitionBy("url").orderBy("_pos")
-    prev_size = F.lag("predominant_size").over(w)
-    return (
-        df.withColumn("_prev_size", prev_size)
-        .filter(
-            F.col("predominant_size").isNotNull()
-            & F.col("predominant_size").eqNullSafe(F.col("_prev_size"))
-            & F.col("gap_before").isNotNull()
-            & (F.col("gap_before") > 0.01)
-        )
-        .select(
-            "url",
-            F.col("predominant_size").alias("context_size"),
-            round_to_nearest(F.col("gap_before"), gap_rounding).alias("rounded_gap"),
-            "_pos",
-        )
-    )
-
-
-def context_line_totals(lines: DataFrame) -> DataFrame:
-    """Per (url, predominant_size): total line count (analyzer.py:88-93)."""
-    return (
-        lines.filter(F.col("predominant_size").isNotNull())
-        .groupBy("url", F.col("predominant_size").alias("context_size"))
-        .agg(F.count("*").alias("total_lines"))
+    return _gapped(lines, gap_rounding).filter(F.col("_gap").isNotNull()).select(
+        "url",
+        F.col("predominant_size").alias("context_size"),
+        F.col("_gap").alias("rounded_gap"),
+        "_pos",
     )
 
 
@@ -70,29 +67,37 @@ def contextual_spacing_rules(
     hi_mult: float = 1.2,
     para_mult: float = 1.1,
 ) -> DataFrame:
-    """A7 (analyzer.py:122-210): per (url, context_size) spacing rules.
+    """A7 (analyzer.py:122-210): per (url, context_size) spacing rules, for
+    the contexts with at least one gap.
 
-    Returns: url, context_size, most_common_gap, range_lo, range_hi,
-    para_spacing_max, total_gaps, total_lines, first_ctx_pos (for the O1
-    fallback tie-break = insertion order of the context).
+    Returns: url, context_size, most_common_gap, total_gaps, first_ctx_pos
+    (for the O1 fallback tie-break = insertion order of the context),
+    range_lo, range_hi, para_spacing_max, total_lines (every line of that
+    predominant size, analyzer.py:88-93).
     """
-    gaps = contextual_gaps(lines, gap_rounding)
-    per_gap = gaps.groupBy("url", "context_size", "rounded_gap").agg(
-        F.count("*").alias("cnt"), F.min("_pos").alias("first_seen")
+    per_gap = (
+        _gapped(lines, gap_rounding)
+        .filter(F.col("predominant_size").isNotNull())
+        .groupBy("url", F.col("predominant_size").alias("context_size"), "_gap")
+        .agg(F.count("*").alias("cnt"), F.min("_pos").alias("first_seen"))
     )
+    # the null-_gap group (the context's gapless lines) adds to total_lines only
+    is_gap = F.col("_gap").isNotNull()
     rules = per_gap.groupBy("url", "context_size").agg(
-        F.max_by("rounded_gap", F.struct(F.col("cnt"), -F.col("first_seen"))).alias(
+        F.max_by("_gap", F.when(is_gap, F.struct(F.col("cnt"), -F.col("first_seen")))).alias(
             "most_common_gap"
         ),
-        F.sum("cnt").alias("total_gaps"),
-        F.min("first_seen").alias("first_ctx_pos"),
+        F.sum(F.when(is_gap, F.col("cnt"))).alias("total_gaps"),
+        F.min(F.when(is_gap, F.col("first_seen"))).alias("first_ctx_pos"),
+        F.sum("cnt").alias("total_lines"),
     )
-    rules = (
-        rules.withColumn("range_lo", F.col("most_common_gap") * lo_mult)
-        .withColumn("range_hi", F.col("most_common_gap") * hi_mult)
-        .withColumn("para_spacing_max", F.col("context_size") * para_mult)
+    return rules.filter(F.col("total_gaps").isNotNull()).select(
+        "url", "context_size", "most_common_gap", "total_gaps", "first_ctx_pos",
+        (F.col("most_common_gap") * lo_mult).alias("range_lo"),
+        (F.col("most_common_gap") * hi_mult).alias("range_hi"),
+        (F.col("context_size") * para_mult).alias("para_spacing_max"),
+        "total_lines",
     )
-    return rules.join(context_line_totals(lines), ["url", "context_size"], "left")
 
 
 def fallback_context(rules: DataFrame) -> DataFrame:
@@ -145,10 +150,11 @@ def classify_gaps(
 
 def line_spacing_summary(lines: DataFrame, step: float = 0.5) -> DataFrame:
     """A4/A5 (analyzer.py:331-382): doc-level most common positive rounded
-    spacing + potential-paragraph-gap window counts.
+    spacing, preferring spacings > 0.01 (one aggregate: the non-zero mode
+    is the conditional max_by).
 
-    Returns per url: most_common_spacing, its count, total_spacings,
-    para_gap_lo/hi bounds.
+    Returns per url: most_common_spacing, most_common_spacing_count,
+    total_spacings.
     """
     sp = (
         _doc_ordered(lines)
@@ -156,21 +162,10 @@ def line_spacing_summary(lines: DataFrame, step: float = 0.5) -> DataFrame:
         .select("url", round_to_nearest(F.col("gap_before"), step).alias("sp"), "_pos")
     )
     per = sp.groupBy("url", "sp").agg(F.count("*").alias("cnt"), F.min("_pos").alias("fs"))
-    nz = per.filter(F.col("sp") > 0.01).groupBy("url").agg(
-        F.max_by("sp", F.struct("cnt", -F.col("fs"))).alias("mc_nz"),
-        F.max(F.struct("cnt", -F.col("fs")))["cnt"].alias("mc_nz_cnt"),
-    )
-    anymode = per.groupBy("url").agg(
-        F.max_by("sp", F.struct("cnt", -F.col("fs"))).alias("mc_any"),
-        F.max(F.struct("cnt", -F.col("fs")))["cnt"].alias("mc_any_cnt"),
+    order = F.struct("cnt", -F.col("fs"))
+    nz_order = F.when(F.col("sp") > 0.01, order)
+    return per.groupBy("url").agg(
+        F.coalesce(F.max_by("sp", nz_order), F.max_by("sp", order)).alias("most_common_spacing"),
+        F.coalesce(F.max(nz_order), F.max(order))["cnt"].alias("most_common_spacing_count"),
         F.sum("cnt").alias("total_spacings"),
-    )
-    return (
-        anymode.join(nz, "url", "left")
-        .select(
-            "url",
-            F.coalesce("mc_nz", "mc_any").alias("most_common_spacing"),
-            F.coalesce("mc_nz_cnt", "mc_any_cnt").alias("most_common_spacing_count"),
-            "total_spacings",
-        )
     )

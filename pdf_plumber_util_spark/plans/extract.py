@@ -27,10 +27,13 @@ Scale design (north_rule):
     pairs); on 600 seeded html pages it was 5.52 s vs 5.82 s, ahead on 6
     of 8 pairs, which resolves no difference, so production stays
     url-first.
-  * Spark 4 note: Generate (posexplode) and FlatMapGroupsInPandas both
-    erase outputPartitioning, so pre-repartitioning pages buys nothing;
-    the C1 window variant (no Python stage) is the default, and the
-    exact-anchor applyInPandas variant remains for pathological drift.
+  * Spark 4 note: the Python stages (the tokenizer's mapInPandas, the
+    exact-anchor C1's applyInPandas) erase outputPartitioning, so
+    pre-repartitioning pages buys nothing; the C1 window variant (no
+    Python stage) is the default, and the exact-anchor variant remains
+    for pathological drift. A Generate keeps its child's partitioning:
+    the tail's header/footer explode runs on the url partitioning
+    (tests/test_plan_shape.py pins zero exchanges above the cache).
   * Skew: the unit of sequential work is one document (url-hash
     partitioning spreads hosts; partition_pages adds explicit salting
     for adversarial hosts upstream of the tokenizer). A giant single
@@ -38,8 +41,12 @@ Scale design (north_rule):
     emitting one body string per url — and is bounded by the
     max_body_chars cap in body assembly (two-level page-then-doc
     aggregation keeps per-buffer sizes page-bounded).
-  * Doc-level aggregates are tiny per url and joined back on (url, ...) —
-    co-partitioned joins, no broadcast needed.
+  * Each tail statistic is one aggregate or one window pass over the
+    partition it is keyed by, not an aggregate joined back on its own
+    key. The tail's joins are the ones between tables: lines<->rules,
+    doc stats<->boundary votes, blocks<->boundaries and body<->boundaries
+    (which carry the doc stats), all co-partitioned on url; the call
+    reads the lines cache 6 times.
 """
 
 from __future__ import annotations
@@ -214,7 +221,9 @@ def documents_from_lines(lines: DataFrame, cfg: EngineConfig = DEFAULT) -> DataF
         F.count("*").alias("n_lines"),
         F.countDistinct("page").alias("n_pages"),
     )
-    bounds = final_boundaries(cands, doc_stats_df.select("url", "doc_bottom"))
+    # n_lines and n_pages pass through final_boundaries: one doc-level
+    # join carries the boundaries and the metrics to the output
+    bounds = final_boundaries(cands, doc_stats_df)
     if cfg.drop_boilerplate:
         from ..operators.webtext import block_boilerplate
 
@@ -234,9 +243,7 @@ def documents_from_lines(lines: DataFrame, cfg: EngineConfig = DEFAULT) -> DataF
             "left",
         )
     body = body_text(blocks, bounds, max_body_chars=cfg.max_body_chars)
-    return body.join(bounds, "url", "left").join(
-        doc_stats_df.drop("doc_bottom"), "url", "left"
-    )
+    return body.join(bounds, "url", "left")
 
 
 def extract_documents(pages: DataFrame, cfg: EngineConfig = DEFAULT,

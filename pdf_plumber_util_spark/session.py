@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Every fixed setting, applied by every session the package makes.
@@ -72,8 +73,11 @@ def get_spark(app_name: str = "pdf_plumber_util_spark",
     builder = SparkSession.builder.appName(app_name).config(map=FIXED_CONF)
     # spark-submit starts the JVM before Python and hands PySpark its
     # gateway port (pyspark/java_gateway.py); without it PySpark starts a
-    # local JVM from this builder's settings
-    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+    # local JVM from this builder's settings. On a live context
+    # getOrCreate would keep the master but apply the partition count, so
+    # the host sizing goes only to a context this call starts.
+    if ("PYSPARK_GATEWAY_PORT" not in os.environ
+            and SparkContext._active_spark_context is None):
         if cores is None:
             cores = int(os.environ.get("SPARK_GRAFT_CPUS")
                         or len(os.sched_getaffinity(0)))

@@ -548,7 +548,13 @@ def test_extract_documents_zero_exchange_tail(spark):
     """The production builder, not just its operators: with AQE and
     broadcast joins off, extract_documents' executed plan has no Exchange
     above the lines cache (the cached scan keeps the url hash
-    partitioning, so every tail join and window runs co-partitioned)."""
+    partitioning, so every tail join, window and explode runs
+    co-partitioned). Each tail statistic is one pass: the plan reads the
+    cache at most 6 times (lines and rules under the blocks; candidates
+    and doc stats under the boundaries, which body assembly and the
+    output join each read) and unions nothing (17 scans and 2 unions
+    when statistics were joined back and header and footer candidates
+    were unioned)."""
     from pdf_plumber_util_spark.plans.extract import extract_documents
 
     old_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -563,6 +569,8 @@ def test_extract_documents_zero_exchange_tail(spark):
         exchanges = [n for n in names if "Exchange" in n]
         assert exchanges == [], exchanges
         assert "SortMergeJoin" in names  # the tail joins really are joins
+        assert names.count("InMemoryTableScan") <= 6, names
+        assert "Union" not in names, names
     finally:
         for c in h:
             c.unpersist()

@@ -156,6 +156,11 @@ def test_extract_cache_handle_releases_lines_cache(spark):
 
     clear_shared_lines()
     spark.catalog.clearCache()
+    # the local checkpoints earlier tests' iterative operators made (near-
+    # dup components, model training) stay persisted until a JVM GC lets
+    # Spark's ContextCleaner drop them; start from none
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
     h: list = []
     docs = extract_documents(synth_pages(spark, 6), cache_handle=h)
     first = sorted(docs.collect())
