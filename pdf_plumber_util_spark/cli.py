@@ -57,8 +57,6 @@ def _config(args):
     overrides = {}
     if getattr(args, "y_tolerance", None) is not None:
         overrides["y_tolerance"] = args.y_tolerance
-    if getattr(args, "x_tolerance", None) is not None:
-        overrides["x_tolerance"] = args.x_tolerance
     if getattr(args, "drop_boilerplate", False):
         overrides["drop_boilerplate"] = True
     return replace(cfg, **overrides) if overrides else cfg
@@ -71,7 +69,6 @@ def _load_pages(spark, path: str):
 def _common(ap: argparse.ArgumentParser) -> None:
     ap.add_argument("--profile", choices=["technical", "academic", "manual", "dense"])
     ap.add_argument("--y-tolerance", type=float, dest="y_tolerance")
-    ap.add_argument("--x-tolerance", type=float, dest="x_tolerance")
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--drop-boilerplate", action="store_true",
                     dest="drop_boilerplate",

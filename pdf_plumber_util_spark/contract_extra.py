@@ -2062,17 +2062,20 @@ def q_block_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``is_link`` deterministically (Helvetica words = link spans) so the
     thing under test is the density arithmetic and block membership, not
     the HTML tokenizer (which emits real is_link flags, tested in
-    tests/test_webtext.py)."""
-    from .contract import _lines_df
-    from .operators import assign_line_ids_window, contextual_spacing_rules, form_blocks
+    tests/test_webtext.py). The lines carry the per-line link stats, as
+    extract_documents builds them with drop_boilerplate on."""
+    from dataclasses import replace
+
+    from .config import DEFAULT
+    from .operators import contextual_spacing_rules, form_blocks
     from .operators.webtext import block_boilerplate
+    from .plans.extract import lines_from_words
 
     words = words_from_lineitem(spark, sf_dir).withColumn(
         "is_link", F.col("fontname") == "Helvetica"
     )
-    lines, _ = _lines_df(spark, sf_dir)
-    blocks = form_blocks(lines, contextual_spacing_rules(lines))
-    out = block_boilerplate(assign_line_ids_window(words), lines, blocks)
+    lines, _ = lines_from_words(words, replace(DEFAULT, drop_boilerplate=True))
+    out = block_boilerplate(form_blocks(lines, contextual_spacing_rules(lines)))
     return out.select(
         "url", "page", F.col("block_id").cast("long").alias("block_id"),
         "n_words", "n_chars", "n_link_chars", "n_lines",

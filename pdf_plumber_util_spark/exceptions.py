@@ -4,7 +4,7 @@ Parity surface for the reference's exception hierarchy
 (core/exceptions.py:11-200): every error carries a human message, an
 actionable suggestion, a context dict, and the original exception when
 chained — re-expressed for this engine's failure sites (table scans,
-stage loads, page-range specs, resume state) instead of the reference's
+stage loads, page-range specs) instead of the reference's
 PDF-file sites. Per-document parse failures are deliberately NOT
 exceptions here: the tokenizer isolates them row-wise (zero words +
 sidecar metric) so one poison document can never fail a 10^12-doc job —
@@ -93,39 +93,3 @@ class PageRangeError(EngineError):
             "suggestion", "Use forms like '3', '1-5', '1-3,7', '-4', '10-'"
         )
         super().__init__(f"Invalid page range: {spec!r}", context=context, **kwargs)
-
-
-class AnalysisStageError(EngineError):
-    """A named analysis stage failed (reference AnalysisError analog)."""
-
-    def __init__(self, message: str, stage: str | None = None, **kwargs):
-        context = kwargs.pop("context", {})
-        context.update({"stage": stage})
-        super().__init__(message, context=context, **kwargs)
-
-
-class ConfigError(EngineError):
-    """Invalid configuration value (reference ConfigurationError)."""
-
-    def __init__(self, message: str, field: str | None = None, **kwargs):
-        context = kwargs.pop("context", {})
-        context.update({"field": field})
-        kwargs.setdefault(
-            "suggestion",
-            "Check configuration values against the documented ranges",
-        )
-        super().__init__(message, context=context, **kwargs)
-
-
-class ResumeStateError(EngineError):
-    """Resume sidecar state is unreadable or inconsistent."""
-
-    def __init__(self, message: str, sidecar: str | None = None, **kwargs):
-        context = kwargs.pop("context", {})
-        context.update({"sidecar": sidecar})
-        kwargs.setdefault(
-            "suggestion",
-            "Delete the sidecar directory to restart from scratch, or "
-            "restore it from the last known-good run",
-        )
-        super().__init__(message, context=context, **kwargs)

@@ -31,7 +31,6 @@ from .webtext import (  # noqa: F401
     gopher_quality,
     host_of,
     host_stats,
-    line_link_stats,
     mix_plan,
     mix_sample,
     pack_sequences,

@@ -35,8 +35,13 @@ def form_blocks(lines: DataFrame, rules: DataFrame, segments: DataFrame | None =
     Returns one row per block:
       url, page, block_id, text, text_lines, n_lines, predominant_size,
       gap_before, gap_after, bbox, first_line_number, last_line_number
+      [+ n_words, n_chars, n_link_chars when the lines carry
+         line_words/line_chars/line_link_chars (build_segments
+         with_link_stats): three more sums in the same block aggregate,
+         read by webtext.block_boilerplate]
       [+ size_coverage, predominant_font, font_coverage with segments]
     """
+    has_link_stats = "line_chars" in lines.columns
     r = rules.select(
         "url",
         F.col("context_size").alias("predominant_size"),
@@ -74,6 +79,10 @@ def form_blocks(lines: DataFrame, rules: DataFrame, segments: DataFrame | None =
         F.min("line_number").alias("_first_ln"),
         F.max("line_number").alias("_last_ln"),
         F.first("predominant_size").alias("predominant_size"),
+        *([F.sum("line_words").alias("n_words"),
+           F.sum("line_chars").alias("n_chars"),
+           F.sum("line_link_chars").alias("n_link_chars")]
+          if has_link_stats else []),
     )
     blocks = agg.select(
         "url",
@@ -97,6 +106,7 @@ def form_blocks(lines: DataFrame, rules: DataFrame, segments: DataFrame | None =
         ).alias("bbox"),
         F.col("_first_ln").alias("first_line_number"),
         F.col("_last_ln").alias("last_line_number"),
+        *(["n_words", "n_chars", "n_link_chars"] if has_link_stats else []),
     )
 
     # W3: inter-block gaps from bboxes, unclamped (analyzer.py:803-812)

@@ -208,10 +208,10 @@ def body_text(blocks: DataFrame, boundaries: DataFrame,
         F.col("bbox")["bottom"] <= F.coalesce("footer_top", F.lit(1e18))
     )
     # opt-in DOM-heuristic strip: extract_documents(drop_boilerplate=True)
-    # pre-marks blocks with _boilerplate; folding it into _keep here (not
-    # pre-filtering) keeps n_blocks_dropped truthful
-    if "_boilerplate" in blocks.columns:
-        kept_flag = kept_flag & ~F.coalesce("_boilerplate", F.lit(False))
+    # marks blocks with is_boilerplate (webtext.block_boilerplate); folding
+    # it into _keep here (not pre-filtering) keeps n_blocks_dropped truthful
+    if "is_boilerplate" in blocks.columns:
+        kept_flag = kept_flag & ~F.coalesce("is_boilerplate", F.lit(False))
     tagged = joined.withColumn("_keep", kept_flag)
 
     # level 1: page-bounded buffers. Empty page texts (no kept blocks)

@@ -222,6 +222,14 @@ def ngram_jaccard(docs: DataFrame, k: int = 3, max_doc_id: int | None = None,
     )
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD under a ``localCheckpoint``'ed DataFrame: its
+    analysed plan is a LogicalRDD over that RDD. A local checkpoint has
+    no lineage to recompute from, so release only a round nothing reads
+    any more (the next round is already eagerly checkpointed)."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def connected_components(edges: DataFrame, max_iter: int = 15,
                          a_col: str = "doc_a",
                          b_col: str = "doc_b") -> DataFrame:
@@ -249,9 +257,11 @@ def connected_components(edges: DataFrame, max_iter: int = 15,
     join/union/distinct per round and Catalyst re-optimizes the whole
     history every round (measured: driver-heap OOM near round 10 on a
     1000-edge chain). Checkpointing truncates the lineage so every
-    round's plan is flat. On a cluster, flip to reliable checkpoints
-    (sparkContext.setCheckpointDir + DataFrame.checkpoint) when
-    executor loss must not restart the loop.
+    round's plan is flat, and each superseded round is released as soon
+    as the next one is materialized (release_checkpoint), so a call
+    leaves only the final round persisted. On a cluster, flip to
+    reliable checkpoints (sparkContext.setCheckpointDir +
+    DataFrame.checkpoint) when executor loss must not restart the loop.
 
     Returns (node, component) for every node incident to an edge;
     isolated nodes never appear (callers union them back — see
@@ -304,6 +314,7 @@ def connected_components(edges: DataFrame, max_iter: int = 15,
         stable = new_e.count() == e.count() and (
             new_e.join(e, ["u", "v"], "left_anti").limit(1).count() == 0
         )
+        release_checkpoint(e)
         e = new_e
         if stable:
             converged = True

@@ -159,8 +159,8 @@ def build_segments(words_with_lines: DataFrame,
       [+ page_width/page_height pass-through when present]
       [+ seg_chars/seg_link_chars/seg_words when with_link_stats — three
        extra sums in the SAME aggregate (zero added shuffles), summed per
-       line by assemble_lines for the boilerplate classifier; requires an
-       is_link word column].
+       line by assemble_lines and per block by form_blocks for the
+       boilerplate classifier; requires an is_link word column].
     """
     w = Window.partitionBy("url", "page", "line_id").orderBy("x0", "word_idx")
     brk = (
@@ -434,8 +434,8 @@ def _assemble_lines_windows(segs: DataFrame,
     )
     maybe_info = [_info_agg().alias("_info")] if include_proportional else []
     # seg-level link stats (build_segments with_link_stats) roll up to the
-    # line in the same aggregate — the boilerplate classifier reads them
-    # off the persisted lines with zero extra passes over words
+    # line in the same aggregate, and form_blocks rolls them up to the
+    # block for the boilerplate classifier: zero extra passes over words
     has_link_stats = "seg_chars" in segs.columns
     link_sums = (
         [

@@ -211,10 +211,6 @@ def remove_pattern(registry: dict[str, PatternDef], name: str) -> dict[str, Patt
     return out
 
 
-def get_patterns_by_type(registry: dict[str, PatternDef], pattern_type: str) -> dict[str, PatternDef]:
-    return {n: d for n, d in registry.items() if _as_def(d).pattern_type == pattern_type}
-
-
 def get_pattern_set(set_name: str,
                     registry: dict[str, PatternDef] | None = None,
                     sets: dict[str, list[str]] | None = None) -> dict[str, PatternDef]:
@@ -247,18 +243,6 @@ def load_patterns_file(path: str) -> tuple[dict[str, PatternDef], dict[str, list
     sets = dict(PATTERN_SETS)
     sets.update(data.get("pattern_sets") or {})
     return reg, sets
-
-
-def pattern_registry_df(spark, registry: dict[str, PatternDef] | None = None) -> DataFrame:
-    rows = [
-        (n, d.pattern_type, d.regex, d.description, d.hierarchy_level)
-        for n, d in ((k, _as_def(v)) for k, v in (registry or PATTERN_REGISTRY).items())
-    ]
-    return spark.createDataFrame(
-        rows,
-        "pattern_name string, pattern_type string, regex string, "
-        "description string, hierarchy_level int",
-    )
 
 
 # ------------------------------------------------------------------ scan

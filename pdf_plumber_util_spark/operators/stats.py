@@ -1,5 +1,5 @@
 """Remaining aggregation / window / projection operators from SURVEY §2:
-A12-A17, W4/W5, P3/P6/P7, O5, S6, V1/V2, J2 — each a small composable
+A12-A17, W4/W5, P6/P7, O5, S6, V1/V2, J2 — each a small composable
 DataFrame function with a DuckDB-oracle twin in contract.py.
 """
 
@@ -103,16 +103,6 @@ def word_y_distances(words: DataFrame) -> DataFrame:
         "url", "page", "word_idx",
         (F.col("top") - F.lag("top").over(w)).alias("y0_dist"),
         (F.col("top") - F.lag("bottom").over(w)).alias("y_gap"),
-    )
-
-
-def zone_filter(lines: DataFrame, zone: str, header_zone_pt: float = 90.0,
-                footer_zone_in: float = 1.0) -> DataFrame:
-    """P3 (analyzer.py:487-529): header/footer zone predicates."""
-    if zone == "header":
-        return lines.filter(F.col("bbox")["top"] < header_zone_pt)
-    return lines.filter(
-        F.col("bbox")["bottom"] > F.col("page_height") - footer_zone_in * 72.0
     )
 
 

@@ -600,7 +600,8 @@ def train_logreg_words(docs: DataFrame, label_col: str = "label",
     (doc_id, word, m) table against the current weights, a doc-keyed
     aggregate for the margins, and a word-keyed aggregate for the
     gradient; weights never leave the cluster (localCheckpoint per step
-    truncates the iterative lineage exactly like connected_components).
+    truncates the iterative lineage exactly like connected_components,
+    and the step it supersedes is released).
     Zero-token documents cannot contribute gradient and are excluded
     from N.
 
@@ -612,6 +613,7 @@ def train_logreg_words(docs: DataFrame, label_col: str = "label",
     partitionings and reproducible by the DuckDB oracle (t17).
     """
     from ..functions.rounding import py_round
+    from .dedup import release_checkpoint
 
     if steps < 1:
         raise ValueError("steps must be >= 1")
@@ -672,12 +674,14 @@ def train_logreg_words(docs: DataFrame, label_col: str = "label",
             "word",
             (py_round((F.col("_g") / n_docs) * quant) / quant).alias("g"),
         )
-        weights = weights.join(grad, "word", "left").select(
+        new_weights = weights.join(grad, "word", "left").select(
             "word",
             (F.col("weight") - lr * F.coalesce("g", F.lit(0.0))).alias(
                 "weight"
             ),
         ).localCheckpoint(eager=True)
+        release_checkpoint(weights)
+        weights = new_weights
     dw.unpersist()
     nd.unpersist()
     return weights

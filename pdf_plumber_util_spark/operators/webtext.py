@@ -329,23 +329,7 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def line_link_stats(words_lined: DataFrame) -> DataFrame:
-    """Per-line char/link-char/word counts from a word table carrying
-    ``line_id`` and ``is_link`` — the word-sized half of
-    block_boilerplate, split out so a pipeline can compute it ONCE next
-    to line assembly (same (url, page, line_id) key) and persist it with
-    the lines instead of re-deriving words later."""
-    return words_lined.groupBy("url", "page", "line_id").agg(
-        F.sum(F.length("text")).cast("long").alias("line_chars"),
-        F.sum(
-            F.when(F.col("is_link"), F.length("text")).otherwise(0)
-        ).cast("long").alias("line_link_chars"),
-        F.count("*").cast("long").alias("line_words"),
-    )
-
-
-def block_boilerplate(words_lined: DataFrame | None, lines: DataFrame,
-                      blocks: DataFrame,
+def block_boilerplate(blocks: DataFrame,
                       max_link_density: float = 0.33,
                       min_text_density: float = 2.0) -> DataFrame:
     """Text-density / link-density boilerplate classifier per block (the
@@ -359,73 +343,19 @@ def block_boilerplate(words_lined: DataFrame | None, lines: DataFrame,
         footer menus, related-links boxes) OR text_density <
         min_text_density (sparse label/button clutter).
 
-    Inputs:
-      words_lined: word table WITH ``line_id`` (assign_line_ids output)
-        and a boolean ``is_link`` column (the HTML tokenizer emits it;
-        synthetic corpora derive it deterministically). May be None when
-        ``lines`` already carries the line_link_stats columns
-        (line_chars / line_link_chars / line_words) — the flagship path
-        attaches them before its persist so the tokenizer never reruns.
-      lines: assembled lines (needs url/page/line_id/line_number/text/
-        predominant_size — maps word line_ids to block line numbers).
-      blocks: form_blocks output (first/last_line_number per block).
-
-    Shape at scale: one word-sized groupBy on (url, page, line_id) — the
-    same key the line assembly already clusters on — then a
-    co-partitioned (url, page) equi-join with a residual line-range
-    predicate (lines x blocks per page is tiny), then a line-sized
-    groupBy per block. Densities divide two exact BIGINT sums, so the
-    doubles are bit-identical across engines regardless of sum order.
+    Input: form_blocks output over lines that carry the per-line link
+    stats (lines_from_words with drop_boilerplate, or build_segments
+    with_link_stats), so each block row already holds n_words, n_chars,
+    n_link_chars and n_lines from the block aggregate. Adds
+    link_density, text_density and is_boilerplate to those rows: a
+    projection, no join and no second pass over the lines. Densities
+    divide two exact BIGINT sums, so the doubles are bit-identical across
+    engines regardless of sum order.
     """
-    from ..functions.text import py_strip
-
-    admitted = lines.filter(
-        (py_strip(F.col("text")) != "")
-        & F.col("predominant_size").isNotNull()
-    )
-    # exactly the lines form_blocks admitted (same predicate), so the
-    # range join reproduces block membership
-    if "line_chars" in lines.columns:
-        member_lines = admitted.select(
-            "url", "page", "line_id", "line_number",
-            F.col("line_chars").alias("_chars"),
-            F.col("line_link_chars").alias("_link_chars"),
-            F.col("line_words").alias("_words"),
-        )
-    else:
-        if words_lined is None:
-            raise ValueError(
-                "block_boilerplate: pass words_lined or lines carrying "
-                "line_link_stats columns"
-            )
-        stats = line_link_stats(words_lined).select(
-            "url", "page", "line_id",
-            F.col("line_chars").alias("_chars"),
-            F.col("line_link_chars").alias("_link_chars"),
-            F.col("line_words").alias("_words"),
-        )
-        member_lines = admitted.select(
-            "url", "page", "line_id", "line_number"
-        ).join(stats, ["url", "page", "line_id"])
-    b = blocks.select(
-        "url", "page", "block_id", "first_line_number", "last_line_number"
-    )
-    member = member_lines.join(b, ["url", "page"]).filter(
-        F.col("line_number").between(
-            F.col("first_line_number"), F.col("last_line_number")
-        )
-    )
-    agg = member.groupBy("url", "page", "block_id").agg(
-        F.sum("_words").alias("n_words"),
-        F.sum("_chars").alias("n_chars"),
-        F.sum("_link_chars").alias("n_link_chars"),
-        F.count("*").cast("long").alias("n_lines"),
-    )
     link_density = F.col("n_link_chars").cast("double") / F.col("n_chars")
     text_density = F.col("n_words").cast("double") / F.col("n_lines")
-    return agg.select(
-        "url", "page", "block_id", "n_words", "n_chars", "n_link_chars",
-        "n_lines",
+    return blocks.select(
+        "*",
         link_density.alias("link_density"),
         text_density.alias("text_density"),
         (

@@ -46,7 +46,9 @@ Scale design (north_rule):
     key. The tail's joins are the ones between tables: lines<->rules,
     doc stats<->boundary votes, blocks<->boundaries and body<->boundaries
     (which carry the doc stats), all co-partitioned on url; the call
-    reads the lines cache 6 times.
+    reads the lines cache 6 times, with the opt-in boilerplate strip on
+    or off: the strip's per-block sums ride form_blocks' own block
+    aggregate, and its densities are a projection of the block rows.
 """
 
 from __future__ import annotations
@@ -128,8 +130,8 @@ def lines_from_words(words: DataFrame, cfg: EngineConfig = DEFAULT,
         wl = wl.withColumn("is_link", F.lit(False))
     # drop_boilerplate: the per-line char/link/word counts ride the
     # EXISTING segment and line aggregates (three extra sums, zero added
-    # shuffles or word passes) and land in the lines, where the
-    # boilerplate classifier reads them for free
+    # shuffles or word passes) and land in the lines; form_blocks sums
+    # them per block for the boilerplate classifier
     segs = build_segments(wl, with_link_stats=cfg.drop_boilerplate)
     lines = assemble_lines(wl, segs, page_dims(words),
                            include_proportional=include_proportional)
@@ -227,20 +229,12 @@ def documents_from_lines(lines: DataFrame, cfg: EngineConfig = DEFAULT) -> DataF
     if cfg.drop_boilerplate:
         from ..operators.webtext import block_boilerplate
 
-        # lines carry the line_link_stats columns (lines_from_words), so
-        # no word re-derivation happens here
-        bp = block_boilerplate(
-            None, lines, blocks,
+        # lines carry the per-line link stats (lines_from_words), so the
+        # block aggregate above already summed them per block
+        blocks = block_boilerplate(
+            blocks,
             max_link_density=cfg.max_link_density,
             min_text_density=cfg.min_text_density,
-        )
-        blocks = blocks.join(
-            bp.select(
-                "url", "page", "block_id",
-                F.col("is_boilerplate").alias("_boilerplate"),
-            ),
-            ["url", "page", "block_id"],
-            "left",
         )
     body = body_text(blocks, bounds, max_body_chars=cfg.max_body_chars)
     return body.join(bounds, "url", "left")

@@ -154,15 +154,21 @@ def run_resumable(pages: DataFrame, spark: SparkSession, out_dir: str,
         int(r[BUCKET_COL]): r["n_in"]
         for r in todo.groupBy(BUCKET_COL).agg(F.count("*").alias("n_in")).collect()
     }
-    docs = with_bucket(extract_documents(todo.drop(BUCKET_COL), cfg), n_buckets)
+    cache: list = []
+    docs = with_bucket(
+        extract_documents(todo.drop(BUCKET_COL), cfg, cache_handle=cache),
+        n_buckets,
+    )
 
     t0 = time.time()
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        docs.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(out_dir)
+        (docs.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(BUCKET_COL).parquet(out_dir))
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        # the audit below re-reads the landed files, not the lines cache
+        for c in cache:
+            c.unpersist()
     wall = round(time.time() - t0, 3)
 
     # audit: read back what actually landed, then publish

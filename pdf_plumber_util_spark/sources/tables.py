@@ -196,14 +196,3 @@ WORDS_FROM_LINEITEM_SQL = _WORDS_SQL_TEMPLATE.format(
 WORDS_TIGHT_SQL = _WORDS_SQL_TEMPLATE.format(
     x0=f"72 + {_SLOT0_SQL} * 14", w="(CAST(qty AS INT) % 8) * 0.5"
 )
-
-# SQL fragment: banker's rounding of (expr) to the nearest (step) — the
-# same floor+half-to-even correction the Spark side uses (functions/rounding.py)
-def sql_round_to_nearest(expr: str, step: str) -> str:
-    q = f"(({expr}) / ({step}))"
-    fl = f"FLOOR({q})"
-    return (
-        f"(CASE WHEN {q} - {fl} > 0.5 THEN {fl} + 1 "
-        f"WHEN {q} - {fl} < 0.5 THEN {fl} "
-        f"WHEN CAST({fl} AS BIGINT) % 2 = 0 THEN {fl} ELSE {fl} + 1 END) * ({step})"
-    )

@@ -2,7 +2,6 @@ from .events import (  # noqa: F401
     stream_events,
     hourly_counts_stream,
     session_stream,
-    stream_extraction_metrics,
 )
 from .extraction import (  # noqa: F401
     read_metrics,

@@ -3,7 +3,7 @@
 The reference is pure batch (SURVEY.md §2.14: no watermarks/state anywhere),
 so this module is the *engine-completeness* layer rather than a port: the
 same aggregations the batch contract exposes (hourly rollups, 30-minute
-sessionization, extraction metrics) expressed as streaming plans, so a
+sessionization) expressed as streaming plans, so a
 Common-Crawl ingest can run continuously. Batch/stream parity is tested by
 running the stream with availableNow over the same parquet input and
 comparing to the batch query result.
@@ -53,17 +53,6 @@ def session_stream(events: DataFrame, gap: str = "30 minutes",
             F.col("sw.end").alias("session_end"),
             "n_events",
         )
-    )
-
-
-def stream_extraction_metrics(docs_stream: DataFrame) -> DataFrame:
-    """North-rule metrics over a streaming extraction output: running
-    per-trigger totals of chars/blocks (append-mode friendly)."""
-    return docs_stream.groupBy().agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("chars_extracted").cast("long").alias("chars_extracted"),
-        F.sum("n_blocks_kept").cast("long").alias("blocks_kept"),
-        F.sum("n_blocks_dropped").cast("long").alias("blocks_dropped"),
     )
 
 

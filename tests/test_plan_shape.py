@@ -554,7 +554,9 @@ def test_extract_documents_zero_exchange_tail(spark):
     and doc stats under the boundaries, which body assembly and the
     output join each read) and unions nothing (17 scans and 2 unions
     when statistics were joined back and header and footer candidates
-    were unioned)."""
+    were unioned). The opt-in boilerplate strip keeps those bounds: its
+    per-block sums ride the block aggregate, so it adds no cache scan."""
+    from pdf_plumber_util_spark.config import DEFAULT, EngineConfig
     from pdf_plumber_util_spark.plans.extract import extract_documents
 
     old_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -563,14 +565,15 @@ def test_extract_documents_zero_exchange_tail(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     h: list = []
     try:
-        out = extract_documents(synth_pages(spark, 6), cache_handle=h)
-        names = _node_names(out._jdf.queryExecution().executedPlan())
-        assert "InMemoryTableScan" in names, names
-        exchanges = [n for n in names if "Exchange" in n]
-        assert exchanges == [], exchanges
-        assert "SortMergeJoin" in names  # the tail joins really are joins
-        assert names.count("InMemoryTableScan") <= 6, names
-        assert "Union" not in names, names
+        for cfg in (DEFAULT, EngineConfig(drop_boilerplate=True)):
+            out = extract_documents(synth_pages(spark, 6), cfg, cache_handle=h)
+            names = _node_names(out._jdf.queryExecution().executedPlan())
+            assert "InMemoryTableScan" in names, (cfg, names)
+            exchanges = [n for n in names if "Exchange" in n]
+            assert exchanges == [], (cfg, exchanges)
+            assert "SortMergeJoin" in names  # the tail joins really are joins
+            assert names.count("InMemoryTableScan") <= 6, (cfg, names)
+            assert "Union" not in names, (cfg, names)
     finally:
         for c in h:
             c.unpersist()

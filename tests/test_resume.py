@@ -83,3 +83,22 @@ def test_parse_failures_counted_and_committed(spark, tmp_path):
     # resume: nothing left to do
     remaining = resume_filter(pages, spark, os.path.join(out, "_sidecar"), 2)
     assert remaining.count() == 0
+
+
+def test_run_resumable_releases_lines_cache(spark, tmp_path):
+    """run_resumable unpersists the lines cache extract_documents makes
+    once the landing write is done: nothing stays cached after the call
+    (no persistent RDD, an empty cache manager)."""
+    from pdf_plumber_util_spark.contract import clear_shared_lines
+
+    clear_shared_lines()
+    spark.catalog.clearCache()
+    # start from no persisted RDD (earlier tests' local checkpoints stay
+    # until a JVM GC lets Spark's ContextCleaner drop them)
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+    metas = run_resumable(synth_pages(spark, 8), spark, str(tmp_path / "out"),
+                          n_buckets=4)
+    assert sum(m["n_docs"] for m in metas) == 8
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -465,6 +465,31 @@ def test_connected_components_multi_component_and_star(spark):
     assert comp == {2: 2, 7: 2, 9: 2, 1: 1, 8: 1, 4: 1, 3: 3, 6: 3}
 
 
+def test_iterative_operators_release_superseded_checkpoints(spark):
+    """connected_components and train_logreg_words local-checkpoint every
+    round; each call leaves at most one more persisted RDD (the final
+    round, which the returned DataFrame reads), not one per round."""
+    from pdf_plumber_util_spark.operators.dedup import connected_components
+
+    jsc = spark.sparkContext._jsc
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
+    )
+    before = jsc.getPersistentRDDs().size()
+    comp = connected_components(edges)
+    assert jsc.getPersistentRDDs().size() - before <= 1
+    assert comp.count() == 41 and comp.select("component").distinct().count() == 1
+
+    docs = spark.createDataFrame(
+        [(0, "aa cc", True), (1, "bb cc", False)],
+        "doc_id long, text string, label boolean",
+    )
+    before = jsc.getPersistentRDDs().size()
+    weights = text_analysis.train_logreg_words(docs, label_col="label", steps=5)
+    assert jsc.getPersistentRDDs().size() - before <= 1
+    assert weights.count() == 3
+
+
 # ------------------------------------------ crawl-curation additions (r3)
 
 

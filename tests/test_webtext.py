@@ -192,19 +192,22 @@ def test_block_boilerplate_flags_nav_not_prose(spark):
     pages = spark.createDataFrame([("doc0", html.encode())], "url string, html binary")
     w = tokenize_pages(pages)
     wl = assign_line_ids_window(w)
-    lines = drop_blank_lines(assemble_lines(wl, build_segments(wl), page_dims(w)))
+    segs = build_segments(wl, with_link_stats=True)
+    lines = drop_blank_lines(assemble_lines(wl, segs, page_dims(w)))
     blocks = form_blocks(lines, contextual_spacing_rules(lines))
-    out = block_boilerplate(wl, lines, blocks).collect()
+    out = block_boilerplate(blocks).collect()
     assert out, "no blocks produced"
 
     nav = [r for r in out if r["n_link_chars"] == r["n_chars"]]
     prose = [r for r in out if 0 < r["n_link_chars"] < r["n_chars"]]
     assert nav and all(r["is_boilerplate"] for r in nav)
     assert prose and not any(r["is_boilerplate"] for r in prose)
-    # every line the blocker admitted is accounted for exactly once
-    assert sum(r["n_lines"] for r in out) == blocks.agg(
-        {"n_lines": "sum"}
-    ).collect()[0][0]
+    # every tokenized word, and every link char, lands in exactly one block
+    wc = w.agg(
+        F.count("*"), F.sum(F.when(F.col("is_link"), F.length("text")))
+    ).first()
+    assert sum(r["n_words"] for r in out) == wc[0]
+    assert sum(r["n_link_chars"] for r in out) == wc[1]
 
 
 def _midpage_links_page(spark):
