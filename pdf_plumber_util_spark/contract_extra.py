@@ -1811,8 +1811,8 @@ FROM m GROUP BY pattern_type, pattern_name
 """,
     "t3_fingerprints": r"""
 SELECT doc_id,
-  md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint,
-  substr(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 8) AS fp_bucket
+  md5(trim(regexp_replace(lower(COALESCE(text, '')), '\s+', ' ', 'g'))) AS fingerprint,
+  substr(md5(trim(regexp_replace(lower(COALESCE(text, '')), '\s+', ' ', 'g'))), 1, 8) AS fp_bucket
 FROM documents
 """,
 })

@@ -17,7 +17,7 @@ Scale notes (the design constraint, per the task brief):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_line
@@ -25,6 +25,14 @@ from ..functions.text import normalize_line
 
 def _norm(col):
     return normalize_line(F.lower(col))
+
+
+def content_fingerprint(text: str) -> Column:
+    """The one exact-dedup key, shared by the batch, incremental and
+    streaming dedups and text_analysis.fingerprints: md5 of the
+    normalized text, NULL text fingerprinted as empty text (see
+    exact_duplicates for why)."""
+    return F.md5(_norm(F.coalesce(text, F.lit(""))))
 
 
 def shingle_array(docs: DataFrame, k: int = 3) -> DataFrame:
@@ -80,7 +88,7 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
     """
     fp = docs.select(
         "doc_id",
-        F.md5(_norm(F.coalesce(F.col("text"), F.lit("")))).alias("fingerprint"),
+        content_fingerprint("text").alias("fingerprint"),
     )
     grp = fp.groupBy("fingerprint").agg(
         F.min("doc_id").alias("canonical_id"), F.count("*").alias("group_size")
@@ -736,7 +744,7 @@ def fingerprint_index(docs: DataFrame) -> DataFrame:
     fingerprints only, never text, so the index is tiny relative to the
     corpus and partitions uniformly on the hash."""
     return docs.select(
-        F.md5(_norm(F.coalesce(F.col("text"), F.lit("")))).alias("fingerprint")
+        content_fingerprint("text").alias("fingerprint")
     ).distinct()
 
 
@@ -764,7 +772,7 @@ def incremental_dedup(new_docs: DataFrame, index: DataFrame) -> DataFrame:
     """
     fp = new_docs.select(
         "doc_id",
-        F.md5(_norm(F.coalesce(F.col("text"), F.lit("")))).alias("fingerprint"),
+        content_fingerprint("text").alias("fingerprint"),
     )
     idx = index.select("fingerprint").distinct().withColumn(
         "_in_index", F.lit(True)

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import normalize_line
+from .dedup import content_fingerprint
 
 # tiny per-language stopword lists (shared verbatim with the SQL oracles)
 LANG_STOPWORDS = {
@@ -81,13 +81,14 @@ def lang_id(docs: DataFrame) -> DataFrame:
 
 
 def fingerprints(docs: DataFrame) -> DataFrame:
-    """Document fingerprint: md5 over O3-normalized text (portable across
-    engines), plus a 16-hex-char prefix as a 64-bit-ish bucket key."""
-    norm = normalize_line(F.lower("text"))
+    """Document fingerprint: dedup.content_fingerprint (md5 over
+    O3-normalized text, NULL as empty; portable across engines), plus an
+    8-hex-char prefix as a bucket key."""
+    fp = content_fingerprint("text")
     return docs.select(
         "doc_id",
-        F.md5(norm).alias("fingerprint"),
-        F.substring(F.md5(norm), 1, 8).alias("fp_bucket"),
+        fp.alias("fingerprint"),
+        F.substring(fp, 1, 8).alias("fp_bucket"),
     )
 
 

@@ -35,8 +35,8 @@ Scale design (north_rule):
     the tail's header/footer explode runs on the url partitioning
     (tests/test_plan_shape.py pins zero exchanges above the cache).
   * Skew: the unit of sequential work is one document (url-hash
-    partitioning spreads hosts; partition_pages adds explicit salting
-    for adversarial hosts upstream of the tokenizer). A giant single
+    partitioning of the word stream spreads hosts; the tokenizer stage
+    runs on the input's own partitioning). A giant single
     document concentrates its window work in one task — inherent to
     emitting one body string per url — and is bounded by the
     max_body_chars cap in body assembly (two-level page-then-doc
@@ -74,43 +74,13 @@ from ..operators.spacing import contextual_spacing_rules
 from ..sources.tokenizer import page_dims, tokenize_pages
 
 
-def partition_pages(pages: DataFrame, num_partitions: int | None = None,
-                    salt_hot_hosts: bool = True, salt: str = "s1") -> DataFrame:
-    """Balance the tokenizer stage: repartition pages by a salted url hash.
-
-    What this buys (and doesn't): mapInPandas erases output partitioning
-    in Spark 4, so this exchange can NOT feed the downstream windows —
-    the word stream is repartitioned by url after the tokenizer anyway
-    (_url_partitioned_words). Its sole job is input balance for the most
-    expensive stage (the pandas/Arrow tokenizer): a source whose files
-    cluster a hot host's urls (the north-rule skew case — crawl dumps are
-    host-ordered) would otherwise hand whole hosts to single tasks.
-    Salting the hash term means even adversarial url sets that collide on
-    xxhash64(url) spread; the unit of sequential work stays one document,
-    which a salt cannot split.
-
-    Because it shuffles the html payload, it is OPT-IN (pass
-    num_partitions in extract_lines/extract_documents); well-bucketed
-    Iceberg inputs should skip it.
-    """
-    key = F.xxhash64("url", F.lit(salt)) if salt_hot_hosts else F.xxhash64("url")
-    if num_partitions:
-        return pages.repartition(num_partitions, key)
-    return pages.repartition(key)
-
-
-def _url_partitioned_words(pages: DataFrame,
-                           num_partitions: int | None = None) -> DataFrame:
+def _url_partitioned_words(pages: DataFrame) -> DataFrame:
     """Tokenize, then install THE pipeline exchange: url-hash partitioning
     of the word stream (module docstring: everything downstream reuses
     it). The explicit repartition replaces the (url, page) exchange the
     first window would otherwise insert — same rows moved, but the
     coarser key lets every (url, ...)-keyed join below run
-    co-partitioned.
-
-    num_partitions: opt-in salted input rebalance (see partition_pages)."""
-    if num_partitions:
-        pages = partition_pages(pages, num_partitions)
+    co-partitioned."""
     return tokenize_pages(pages).repartition(F.col("url"))
 
 
@@ -138,12 +108,9 @@ def lines_from_words(words: DataFrame, cfg: EngineConfig = DEFAULT,
     return drop_blank_lines(lines), segs
 
 
-def extract_lines(pages: DataFrame, cfg: EngineConfig = DEFAULT,
-                  num_partitions: int | None = None) -> DataFrame:
-    """pages -> blank-filtered line records (the `_lines.json` analog).
-
-    num_partitions: opt-in salted input rebalance (see partition_pages)."""
-    words = _url_partitioned_words(pages, num_partitions)
+def extract_lines(pages: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
+    """pages -> blank-filtered line records (the `_lines.json` analog)."""
+    words = _url_partitioned_words(pages)
     return lines_from_words(words, cfg, include_proportional=True)[0]
 
 
@@ -241,16 +208,14 @@ def documents_from_lines(lines: DataFrame, cfg: EngineConfig = DEFAULT) -> DataF
 
 
 def extract_documents(pages: DataFrame, cfg: EngineConfig = DEFAULT,
-                      num_partitions: int | None = None,
                       cache_handle: list | None = None) -> DataFrame:
     """Flagship: pages -> (url, body_text, metrics). The full `process`
     path: extract -> rules -> blocks -> boundaries -> main content.
 
-    num_partitions: opt-in salted input rebalance (see partition_pages).
     cache_handle: the internal lines cache is appended to this list so
-    repeated callers (the streaming foreachBatch loop) can unpersist it
-    after their action; one-shot callers may ignore it (the cache dies
-    with the session).
+    repeated callers (the resumable writer, once per commit unit) can
+    unpersist it after their action; one-shot callers may ignore it (the
+    cache dies with the session).
 
     The analysis tail is built over the lines cache as a single leaf
     (_cached_leaf): over the persisted DataFrame each of its ~150
@@ -259,7 +224,7 @@ def extract_documents(pages: DataFrame, cfg: EngineConfig = DEFAULT,
     Building the plan (driver time before any job runs) took a median
     2.67 s that way and 1.19 s over the leaf (600 pages, 4 cores, with
     call-site capture off); the executed plan is the same."""
-    lines, _ = lines_from_words(_url_partitioned_words(pages, num_partitions), cfg)
+    lines, _ = lines_from_words(_url_partitioned_words(pages), cfg)
     # analysis consumes lines multiple times — materialize once (the
     # reference's _lines.json checkpoint between extract and analyze)
     persisted = lines.persist()

@@ -15,14 +15,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_stage(df: DataFrame, out_dir: str, base: str, stage: str,
-                partition_cols: tuple[str, ...] = ()) -> str:
+def write_stage(df: DataFrame, out_dir: str, base: str, stage: str) -> str:
     """K1: write a pipeline stage table under `{out_dir}/{base}_{stage}`."""
     path = os.path.join(out_dir, f"{base}_{stage}")
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(path)
+    df.write.mode("overwrite").parquet(path)
     return path
 
 

@@ -29,7 +29,6 @@ implementation silently broke resume on non-POSIX paths).
 from __future__ import annotations
 
 import json
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -160,7 +159,6 @@ def run_resumable(pages: DataFrame, spark: SparkSession, out_dir: str,
         n_buckets,
     )
 
-    t0 = time.time()
     try:
         (docs.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
@@ -169,7 +167,6 @@ def run_resumable(pages: DataFrame, spark: SparkSession, out_dir: str,
         # the audit below re-reads the landed files, not the lines cache
         for c in cache:
             c.unpersist()
-    wall = round(time.time() - t0, 3)
 
     # audit: read back what actually landed, then publish
     try:
@@ -204,7 +201,6 @@ def run_resumable(pages: DataFrame, spark: SparkSession, out_dir: str,
             "blocks_kept": int(r.get("blocks_kept") or 0),
             "blocks_dropped": int(r.get("blocks_dropped") or 0),
             "parse_failures": max(0, input_counts[b] - n_docs),
-            "wall_sec": wall,  # single landing job; shared across buckets
         }
         publish_bucket(spark, sidecar_dir, meta)
         metas.append(meta)

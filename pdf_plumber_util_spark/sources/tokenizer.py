@@ -7,10 +7,9 @@ input batch).
 Partitioning note: ``mapInPandas`` ERASES output partitioning in Spark 4,
 so nothing placed before tokenization feeds the downstream windows — the
 C1 window inserts the pipeline's single word-sized exchange either way
-(asserted in tests/test_plan_shape.py). A pre-tokenize repartition is
-therefore purely an input-balance tool for the UDF stage itself: see
-plans/extract.partition_pages for the opt-in salted rebalance of
-host-skewed sources.
+(asserted in tests/test_plan_shape.py). A pre-tokenize repartition could
+therefore only balance the UDF stage itself; the production plan adds
+none, so the tokenizer runs on the input's own partitioning.
 """
 
 from __future__ import annotations

@@ -4,7 +4,6 @@ from .events import (  # noqa: F401
     session_stream,
 )
 from .extraction import (  # noqa: F401
-    read_metrics,
     stream_pages,
     streaming_extract,
 )

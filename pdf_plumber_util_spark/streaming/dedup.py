@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import _norm
+from ..operators.dedup import content_fingerprint
 
 
 def dedup_stream(docs: DataFrame, ts_col: str = "ts",
@@ -43,9 +43,7 @@ def dedup_stream(docs: DataFrame, ts_col: str = "ts",
     exact_duplicates — so a document dropped here is exactly one the
     batch dedup would have flagged, null text included.
     """
-    d = docs.withColumn(
-        "fingerprint", F.md5(_norm(F.coalesce(F.col(text_col), F.lit(""))))
-    )
+    d = docs.withColumn("fingerprint", content_fingerprint(text_col))
     return (
         d.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
         .withWatermark(ts_col, watermark)
@@ -76,9 +74,7 @@ def dedup_stream_against_index(docs: DataFrame, index: DataFrame,
     the watermark — re-crawls farther apart than the horizon are mopped
     up by the next index refresh, as in dedup_stream).
     """
-    d = docs.withColumn(
-        "fingerprint", F.md5(_norm(F.coalesce(F.col(text_col), F.lit(""))))
-    )
+    d = docs.withColumn("fingerprint", content_fingerprint(text_col))
     fresh = d.join(
         index.select("fingerprint").distinct(), "fingerprint", "left_anti"
     )

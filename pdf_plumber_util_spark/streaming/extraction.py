@@ -19,21 +19,20 @@ construction of crawl dumps, mirrored by partitioned parquet input).
 (`extract_documents`), so streaming output is byte-identical to a batch
 run over the same files — pinned by tests/test_streaming.py.
 
-Scale shape: ``maxFilesPerTrigger`` bounds a trigger's working set (the
-streaming analog of the resumable writer's bucket); the checkpoint
-(WAL + sources/0 file log) lives on the cluster FS and survives driver
-restarts. ``foreachBatch`` itself is AT-LEAST-ONCE (a batch can rerun if
-the driver dies between the sink write and the offset commit), so the
-sink write is made idempotent: each batch lands in its own ``_batch_id``
-partition via dynamic partition overwrite — a replayed batch overwrites
-the same partition instead of appending duplicates — and the per-batch
-metrics sidecar file is keyed by batch_id (tmp+rename publish). The
-composition is effectively exactly-once.
+Scale shape: ``maxFilesPerTrigger`` bounds a trigger's working set; the
+checkpoint (WAL + sources/0 file log) lives on the cluster FS and
+survives driver restarts. ``foreachBatch`` itself is AT-LEAST-ONCE (a
+batch can rerun if the driver dies between the sink write and the offset
+commit), so each micro-batch is one commit unit of the resumable writer:
+``run_resumable`` into the batch's own ``_batch_id=N`` directory with one
+bucket. The batch lands by dynamic partition overwrite, is audited from
+the landed files, and publishes one ``_sidecar/bucket_0.json`` marker
+(docs, chars, blocks kept / dropped, parse failures). A replayed batch
+finds its marker and resumes instead of rewriting, so the composition is
+effectively exactly-once.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,82 +50,23 @@ def stream_pages(spark: SparkSession, pages_dir: str, schema=None,
     return reader.parquet(pages_dir)
 
 
-def write_batch_idempotent(docs: DataFrame, out_dir: str,
-                           batch_id: int) -> None:
-    """Idempotent-on-replay micro-batch sink: foreachBatch is
-    at-least-once (a batch can rerun if the driver dies between the sink
-    write and the offset commit), so each batch lands in its own
-    ``_batch_id`` partition with dynamic partition overwrite — a replay
-    overwrites the SAME partition instead of appending duplicates (the
-    overwritePartitions discipline of plans/resume.py)."""
-    from pyspark.sql import functions as F
-
-    (
-        docs.withColumn("_batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(out_dir)
-    )
-
-
 def streaming_extract(pages_stream: DataFrame, out_dir: str,
-                      checkpoint_dir: str, cfg: EngineConfig = DEFAULT,
-                      metrics_dir: str | None = None):
+                      checkpoint_dir: str, cfg: EngineConfig = DEFAULT):
     """Drive the flagship batch plan per micro-batch; returns the started
     StreamingQuery (caller awaits/stops).
 
-    Each trigger: batch ``extract_documents`` over the new files' pages,
-    append body rows to ``out_dir`` (parquet), and optionally append one
-    JSON metrics line per batch (batch_id, docs, chars, blocks kept /
-    dropped, parse failures) to ``metrics_dir`` — the streaming twin of
-    the resumable writer's per-bucket audit sidecar.
+    Each trigger is one ``plans.resume.run_resumable`` commit unit: the
+    new files' documents land under ``{out_dir}/_batch_id={batch_id}``
+    and its ``_sidecar`` holds the batch's one marker, so
+    ``spark.read.parquet(out_dir)`` reads every batch's rows (with
+    ``_batch_id`` and ``url_bucket`` partition columns) and skips the
+    sidecars.
     """
-    from ..plans.extract import extract_documents
+    from ..plans.resume import run_resumable
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        caches: list = []
-        docs = extract_documents(batch_df, cfg, cache_handle=caches)
-        try:
-            _process_batch(spark, docs, batch_df, batch_id)
-        finally:
-            for c in caches:
-                c.unpersist()
-
-    def _write_batch(docs: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(docs, out_dir, batch_id)
-
-    def _process_batch(spark, docs, batch_df, batch_id) -> None:
-        if metrics_dir is None:
-            _write_batch(docs, batch_id)
-            return
-        from pyspark.sql import functions as F
-
-        docs = docs.persist()
-        try:
-            _write_batch(docs, batch_id)
-            n_urls = batch_df.select("url").distinct().count()
-            agg = docs.agg(
-                F.count("*").alias("n_docs"),
-                F.sum("chars_extracted").alias("chars"),
-                F.sum("n_blocks_kept").alias("blocks_kept"),
-                F.sum("n_blocks_dropped").alias("blocks_dropped"),
-            ).collect()[0]
-            _append_metrics(spark, metrics_dir, {
-                "batch_id": batch_id,
-                "n_urls": n_urls,
-                "n_docs": agg["n_docs"],
-                "chars_extracted": int(agg["chars"] or 0),
-                "blocks_kept": int(agg["blocks_kept"] or 0),
-                "blocks_dropped": int(agg["blocks_dropped"] or 0),
-                # a page whose parse yields no words produces no doc row;
-                # same inputs-minus-extracted definition as the batch
-                # resumable audit (plans/resume.py)
-                "parse_failures": n_urls - int(agg["n_docs"] or 0),
-            })
-        finally:
-            docs.unpersist()
+        run_resumable(batch_df, batch_df.sparkSession,
+                      f"{out_dir}/_batch_id={batch_id}", n_buckets=1, cfg=cfg)
 
     return (
         pages_stream.writeStream.foreachBatch(process)
@@ -134,24 +74,3 @@ def streaming_extract(pages_stream: DataFrame, out_dir: str,
         .trigger(availableNow=True)
         .start()
     )
-
-
-def _append_metrics(spark: SparkSession, metrics_dir: str, rec: dict) -> None:
-    """One JSON file per batch via the batch sidecar's atomic Hadoop-FS
-    writer (hdfs/s3a-safe, tmp+rename publish)."""
-    from ..plans.resume import _write_text_atomic
-
-    _write_text_atomic(
-        spark,
-        f"{metrics_dir}/batch_{rec['batch_id']:08d}.json",
-        json.dumps(rec),
-    )
-
-
-def read_metrics(spark: SparkSession, metrics_dir: str) -> list[dict]:
-    """Load the per-batch metrics sidecar (ordered by batch_id)."""
-    from ..plans.resume import _list_json, _read_text
-
-    recs = [json.loads(_read_text(spark, p))
-            for p in _list_json(spark, metrics_dir)]
-    return sorted(recs, key=lambda r: r["batch_id"])

@@ -107,33 +107,6 @@ def test_broadcast_small_dim_join(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
-def test_salted_input_rebalance_plan(spark):
-    """Opt-in salted rebalance (partition_pages): the pages exchange on
-    xxhash64(url, salt) appears BEFORE the tokenizer, the C1 window still
-    contributes exactly its one word exchange, and the salted key spreads
-    a single hot host across partitions."""
-    from pdf_plumber_util_spark.plans.extract import extract_lines, partition_pages
-
-    pages = synth_pages(spark, 8)
-    lines = extract_lines(pages, num_partitions=8)
-    plan = _plan(lines)
-    n_exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
-    assert n_exchanges == 2, f"expected salted + C1 exchange, got {n_exchanges}"
-    assert "xxhash64" in plan
-
-    # skew spread: one host, many urls -> salted key occupies many partitions
-    hot = spark.createDataFrame(
-        [(f"https://hot.example.com/p{i}", b"<p>x</p>") for i in range(64)],
-        "url string, html binary",
-    )
-    parts = (
-        partition_pages(hot, 8)
-        .withColumn("pid", F.spark_partition_id())
-        .select("pid").distinct().count()
-    )
-    assert parts >= 4
-
-
 def test_zero_exchange_analysis_tail(spark):
     """The whole analysis tail must reuse the word stream's url-hash
     partitioning: with broadcast joins disabled (the 100TB analog — the

@@ -1,6 +1,7 @@
 """Streaming/batch parity: the streaming plans must produce exactly the
 batch results when drained with availableNow over the same input."""
 
+import json
 import os
 
 import pytest
@@ -87,23 +88,48 @@ def test_stateful_running_totals_parity(spark, events_dir):
         assert abs(got[u][1] - batch[u][1]) < 1e-6, u
 
 
-def test_streaming_extraction_parity_and_resume(spark, tmp_path):
-    """foreachBatch streaming extraction: (1) drained availableNow output
-    is byte-identical to the batch flagship over the same pages; (2) a
-    restart with the same checkpoint processes ONLY new files (no
-    duplicate urls, metrics sidecar shows two distinct batches)."""
-    from pdf_plumber_util_spark.plans.extract import extract_documents
-    from pdf_plumber_util_spark.sources.pages import synth_pages
+def _drain(spark, pages_dir, out_dir, ckpt):
     from pdf_plumber_util_spark.streaming.extraction import (
-        read_metrics,
         stream_pages,
         streaming_extract,
     )
 
+    q = streaming_extract(stream_pages(spark, pages_dir), out_dir, ckpt)
+    q.awaitTermination(120)
+    return q
+
+
+def _batch_markers(out_dir) -> list[dict]:
+    """Each _batch_id=N directory's sidecar markers, in batch order."""
+    batches = sorted(
+        (d for d in os.listdir(out_dir) if d.startswith("_batch_id=")),
+        key=lambda d: int(d.split("=")[1]),
+    )
+    out = []
+    for d in batches:
+        sidecar = os.path.join(out_dir, d, "_sidecar")
+        names = [f for f in os.listdir(sidecar) if f.endswith(".json")]
+        assert names == ["bucket_0.json"], (d, names)
+        with open(os.path.join(sidecar, names[0])) as f:
+            out.append(json.load(f))
+    return out
+
+
+def test_streaming_extraction_parity_and_resume(spark, tmp_path):
+    """foreachBatch streaming extraction, each micro-batch one
+    run_resumable commit unit: (1) drained availableNow output is
+    byte-identical to the batch flagship over the same pages; (2) a
+    restart with the same checkpoint processes ONLY new files, and a
+    crash before the last offset commit (its commits/N deleted) re-runs
+    that batch, which resumes from its marker: every url lands exactly
+    once; (3) one bucket_0.json marker per batch, whose n_docs sum to
+    the batch plan's doc count with no parse failure."""
+    from pdf_plumber_util_spark.plans.extract import extract_documents
+    from pdf_plumber_util_spark.sources.pages import synth_pages
+
     pages_dir = str(tmp_path / "pages")
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    metrics = str(tmp_path / "metrics")
 
     all_pages = synth_pages(spark, 12).persist()
     first = all_pages.filter(F.xxhash64("url") % 2 == 0)
@@ -111,25 +137,30 @@ def test_streaming_extraction_parity_and_resume(spark, tmp_path):
 
     # wave 1: half the corpus lands
     first.write.mode("overwrite").parquet(pages_dir)
-    q = streaming_extract(
-        stream_pages(spark, pages_dir), out_dir, ckpt, metrics_dir=metrics
-    )
-    q.awaitTermination(120)
-    got1 = spark.read.parquet(out_dir)
-    n1 = got1.count()
+    _drain(spark, pages_dir, out_dir, ckpt)
+    n1 = spark.read.parquet(out_dir).count()
     assert n1 == first.select("url").distinct().count()
 
     # wave 2: the rest lands; same checkpoint -> only new files process
     second.write.mode("append").parquet(pages_dir)
-    q = streaming_extract(
-        stream_pages(spark, pages_dir), out_dir, ckpt, metrics_dir=metrics
-    )
-    q.awaitTermination(120)
+    _drain(spark, pages_dir, out_dir, ckpt)
+
+    # crash after the last batch landed and published, before its offset
+    # commit: the restart re-runs that batch
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    q = _drain(spark, pages_dir, out_dir, ckpt)
+    rerun = [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+    assert rerun == [last]
 
     got = spark.read.parquet(out_dir)
     want = extract_documents(spark.read.parquet(pages_dir))
-    # no duplicates across the restart, full coverage
-    assert got.count() == got.select("url").distinct().count() == want.count()
+    # no duplicates across the restart and the replay, full coverage
+    n_want = want.count()
+    assert got.count() == got.select("url").distinct().count() == n_want
     # byte-identical body text per url vs the batch plan
     mismatch = (
         got.select("url", "body_text", "chars_extracted")
@@ -137,12 +168,33 @@ def test_streaming_extraction_parity_and_resume(spark, tmp_path):
         .count()
     )
     assert mismatch == 0
-    # metrics sidecar: per-batch lineage across both runs
-    recs = read_metrics(spark, metrics)
-    assert len(recs) >= 2
-    assert sum(r["n_docs"] for r in recs) == want.count()
-    assert all(r["parse_failures"] == 0 for r in recs)
+    # one marker per batch, per-batch lineage across both runs
+    metas = _batch_markers(out_dir)
+    assert len(metas) >= 2
+    assert sum(m["n_docs"] for m in metas) == n_want
+    assert all(m["parse_failures"] == 0 for m in metas)
     all_pages.unpersist()
+
+
+def test_streaming_parse_failures_counted_and_committed(spark, tmp_path):
+    """An empty and a non-html page in a stream wave: their batch still
+    commits, and its marker counts both as parse failures."""
+    from pdf_plumber_util_spark.sources.pages import synth_pages
+
+    pages_dir = str(tmp_path / "pages")
+    out_dir = str(tmp_path / "out")
+    good = synth_pages(spark, 3).select("url", "html")
+    bad = spark.createDataFrame(
+        [("https://bad.example.com/empty", b""),
+         ("https://bad.example.com/junk", b"\x00\xff\xfe")],
+        "url string, html binary",
+    )
+    good.unionByName(bad).write.parquet(pages_dir)
+    _drain(spark, pages_dir, out_dir, str(tmp_path / "ckpt"))
+
+    [meta] = _batch_markers(out_dir)
+    assert (meta["n_docs"], meta["parse_failures"]) == (3, 2)
+    assert spark.read.parquet(out_dir).count() == 3
 
 
 def test_extract_cache_handle_releases_lines_cache(spark):
@@ -170,24 +222,6 @@ def test_extract_cache_handle_releases_lines_cache(spark):
     assert sorted(docs.collect()) == first
     assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def test_write_batch_idempotent_replay(spark, tmp_path):
-    """Replaying a micro-batch (at-least-once foreachBatch) overwrites its
-    own _batch_id partition instead of appending duplicates."""
-    from pdf_plumber_util_spark.streaming.extraction import write_batch_idempotent
-
-    out = str(tmp_path / "docs")
-    b0 = spark.createDataFrame([("u1", "a"), ("u2", "b")], "url string, body string")
-    write_batch_idempotent(b0, out, 0)
-    write_batch_idempotent(
-        spark.createDataFrame([("u3", "c")], "url string, body string"), out, 1
-    )
-    # crash-replay of batch 0
-    write_batch_idempotent(b0, out, 0)
-    got = spark.read.parquet(out)
-    assert sorted(r["url"] for r in got.collect()) == ["u1", "u2", "u3"]
-    assert got.filter("_batch_id = 0").count() == 2
 
 
 def test_dedup_stream_parity(spark, tmp_path):

@@ -905,6 +905,21 @@ def test_incremental_dedup_planted(spark):
     assert rerun.filter(~F.col("in_index")).count() == 0
 
 
+def test_null_text_one_fingerprint(spark):
+    """A NULL-text doc gets one fingerprint, md5 of normalized empty
+    text, from fingerprints, exact_duplicates and fingerprint_index."""
+    import hashlib
+
+    from pdf_plumber_util_spark.operators import dedup
+
+    docs = spark.createDataFrame([(1, None)], "doc_id long, text string")
+    empty = hashlib.md5(b"").hexdigest()
+    fp = text_analysis.fingerprints(docs).collect()[0]
+    assert (fp.fingerprint, fp.fp_bucket) == (empty, empty[:8])
+    assert dedup.exact_duplicates(docs).collect()[0].fingerprint == empty
+    assert [r.fingerprint for r in dedup.fingerprint_index(docs).collect()] == [empty]
+
+
 def test_linear_quality_hand_computed(spark):
     import math
 
